@@ -4,25 +4,18 @@ SURVEY.md §7 step 6, §4 custom-physical item 3).
 The pure-DataFrame PageRank superstep is `ranks ⋈ edges → groupBy(dst)`. At
 scale the join re-shuffles the (loop-invariant!) adjacency every iteration.
 This operator materializes the adjacency ONCE as compressed sparse rows,
-block-partitioned by `pmod(src, num_blocks)`:
+block-partitioned by `pmod(src, num_blocks)`, spilled to one .npz per pid
+(`spill_csr_blocks`: srcs, indptr, dsts, fracs). Reused Python workers
+memo-load their blocks on first touch (`_WORKER_BLOCK_CACHE`), so after the
+build the O(E) adjacency crosses the JVM→Arrow→Python boundary ZERO times —
+each superstep ships only the O(V) rank rows. The per-block numpy kernel
+pre-aggregates per dst locally (np.add.reduceat — the numpy analogue of a
+map-side combine); the only shuffle is the partial-contribution
+redistribution, bounded by distinct dsts per block.
 
-    csr_blocks(pid, chunk, srcs: array<long>, indptr: array<int>,
-               dsts: array<long>, fracs: array<double>)
-
-Two physical strategies, identical math (tests assert 1e-12 vs the
-DataFrame path):
-
-1. **Sidecar + worker cache (default)**: the adjacency is spilled ONCE to
-   one .npz per pid (`spill_csr_blocks`); reused Python workers memo-load
-   their blocks on first touch (`_WORKER_BLOCK_CACHE`), so after the build
-   the O(E) adjacency crosses the JVM→Arrow→Python boundary ZERO times —
-   each superstep ships only the O(V) rank rows. The per-block numpy kernel
-   pre-aggregates per dst locally (np.add.reduceat — the numpy analogue of
-   a map-side combine); the only shuffle is the partial-contribution
-   redistribution, bounded by distinct dsts per block.
-2. **Cogroup fallback** (`use_sidecar=False`): rank state cogrouped with a
-   cached CSR-block DataFrame — no local-disk requirement, but the blocks
-   re-cross Arrow every superstep (measured ~1.7× slower at 27M edges).
+``pagerank_csr`` passes this kernel as the contribution operator of the
+PageRank program in ``plans.pagerank``, which owns init, dangling mass, the
+state join and the delta (tests assert 1e-12 vs the DataFrame path).
 
 `num_blocks` defaults to the session's core count — one block per core
 (measured optimum; more blocks multiply duplicate per-dst partials, fewer
@@ -34,14 +27,13 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-from typing import Iterable
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pybiodatafuse_spark.plans.pagerank import _graph, _program
 from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate
 from pybiodatafuse_spark.storage import Storage
 
@@ -74,58 +66,6 @@ def _load_block(store: str, pid: int):
             blk = (z["srcs"], z["indptr"], z["dsts"], z["fracs"])
         _WORKER_BLOCK_CACHE[key] = blk
     return blk
-
-CSR_SCHEMA = (
-    "pid int, chunk int, srcs array<long>, indptr array<int>, "
-    "dsts array<long>, fracs array<double>"
-)
-
-
-def build_csr_blocks(
-    edges_norm: DataFrame, num_blocks: int = 64, max_chunk_edges: int = 2_000_000
-) -> DataFrame:
-    """edges_norm(src, dst, frac) → cached CSR block table (one shuffle,
-    loop-invariant thereafter)."""
-
-    def to_blocks(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        pdf = pdf.sort_values(["src", "dst"], kind="mergesort")
-        src = pdf["src"].to_numpy()
-        dst = pdf["dst"].to_numpy()
-        frac = pdf["frac"].to_numpy()
-        srcs, counts = np.unique(src, return_counts=True)
-        rows = []
-        chunk, start_vertex = 0, 0
-        edge_start = 0
-        while start_vertex < len(srcs):
-            cum = np.cumsum(counts[start_vertex:])
-            take = int(np.searchsorted(cum, max_chunk_edges, side="left")) + 1
-            end_vertex = min(start_vertex + take, len(srcs))
-            n_edges = int(counts[start_vertex:end_vertex].sum())
-            indptr = np.zeros(end_vertex - start_vertex + 1, dtype=np.int32)
-            np.cumsum(counts[start_vertex:end_vertex], out=indptr[1:])
-            rows.append(
-                {
-                    "pid": pid,
-                    "chunk": chunk,
-                    "srcs": srcs[start_vertex:end_vertex],
-                    "indptr": indptr,
-                    "dsts": dst[edge_start : edge_start + n_edges],
-                    "fracs": frac[edge_start : edge_start + n_edges],
-                }
-            )
-            edge_start += n_edges
-            start_vertex = end_vertex
-            chunk += 1
-        return pd.DataFrame(rows)
-
-    blocked = (
-        edges_norm.withColumn("pid", F.pmod(F.col("src"), F.lit(num_blocks)).cast("int"))
-        .groupBy("pid")
-        .applyInPandas(to_blocks, schema=CSR_SCHEMA)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    return blocked
 
 
 def spill_csr_blocks(
@@ -176,10 +116,9 @@ def spill_csr_blocks(
 def _block_contrib(
     rid: np.ndarray, rvals: np.ndarray, blk
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Per-block contribution math — shared by the cogroup kernel and the
-    sidecar kernel so both paths are bit-identical: rank lookup via
-    searchsorted, per-edge frac multiply, LOCAL pre-aggregation per dst
-    (np.add.reduceat — the numpy analogue of a map-side combine)."""
+    """Per-block contribution math: rank lookup via searchsorted, per-edge
+    frac multiply, LOCAL pre-aggregation per dst (np.add.reduceat — the numpy
+    analogue of a map-side combine)."""
     srcs, indptr, dsts, fracs = blk
     pos = np.searchsorted(rid, srcs)
     if pos.size and (pos.max() >= rid.size or not np.array_equal(rid[pos], srcs)):
@@ -208,37 +147,6 @@ def _make_sidecar_kernel(store: str):
     return kernel
 
 
-def _contrib_kernel(ranks_pdf: pd.DataFrame, blocks_pdf: pd.DataFrame) -> pd.DataFrame:
-    """Cogrouped kernel: block-local edge contributions, pre-aggregated per dst."""
-    if blocks_pdf.empty or ranks_pdf.empty:
-        return pd.DataFrame({"dst": pd.Series(dtype="int64"), "contrib": pd.Series(dtype="float64")})
-    rid = ranks_pdf["id"].to_numpy()
-    rvals = ranks_pdf["rank"].to_numpy()
-    order = np.argsort(rid, kind="mergesort")
-    rid, rvals = rid[order], rvals[order]
-    out_dst, out_val = [], []
-    for row in blocks_pdf.itertuples(index=False):
-        srcs = np.asarray(row.srcs, dtype=np.int64)
-        indptr = np.asarray(row.indptr, dtype=np.int64)
-        dsts = np.asarray(row.dsts, dtype=np.int64)
-        fracs = np.asarray(row.fracs, dtype=np.float64)
-        pos = np.searchsorted(rid, srcs)
-        if pos.size and (pos.max() >= rid.size or not np.array_equal(rid[pos], srcs)):
-            raise ValueError("csr kernel: rank state does not cover all edge sources")
-        src_rank = rvals[pos]
-        per_edge = np.repeat(src_rank, np.diff(indptr)) * fracs
-        sort_idx = np.argsort(dsts, kind="mergesort")
-        dsts_sorted = dsts[sort_idx]
-        vals_sorted = per_edge[sort_idx]
-        uniq, starts = np.unique(dsts_sorted, return_index=True)
-        sums = np.add.reduceat(vals_sorted, starts)
-        out_dst.append(uniq)
-        out_val.append(sums)
-    return pd.DataFrame(
-        {"dst": np.concatenate(out_dst), "contrib": np.concatenate(out_val)}
-    )
-
-
 def pagerank_csr(
     spark: SparkSession,
     edges: DataFrame,
@@ -251,21 +159,15 @@ def pagerank_csr(
     storage: Storage | None = None,
     run_id: str | None = None,
     checkpoint_every: int = 5,
-    use_sidecar: bool = True,
     block_store: str | None = None,
 ) -> SuperstepResult:
     """PageRank over CSR blocks; identical semantics to plans.pagerank.
 
-    ``use_sidecar=True`` (default): adjacency is spilled ONCE to per-pid .npz
-    block files and memo-loaded inside reused Python workers — per superstep
-    only the O(V) rank rows cross the JVM→Arrow→Python boundary. The cogroup
-    path (``use_sidecar=False``) re-ships the O(E) blocks through Arrow every
-    superstep (measured 1.7× slower at 27M edges) and remains as the
-    no-local-disk fallback."""
-    out_w = edges.groupBy("src").agg(F.sum("weight").alias("out_w"))
-    edges_norm = edges.join(out_w, "src").select(
-        "src", "dst", (F.col("weight") / F.col("out_w")).alias("frac")
-    )
+    The adjacency is spilled ONCE to per-pid .npz block files under
+    ``block_store`` (a temp dir, removed afterwards, when None) and
+    memo-loaded inside reused Python workers — per superstep only the O(V)
+    rank rows cross the JVM→Arrow→Python boundary."""
+    _, edges_norm, init = _graph(edges, vertices)
     if num_blocks is None:
         # one block per core is the sweet spot: fewer blocks underutilize,
         # more blocks multiply duplicate per-dst partials across blocks
@@ -273,80 +175,25 @@ def pagerank_csr(
         # 8→19.7)
         num_blocks = spark.sparkContext.defaultParallelism
     own_store = None
-    if use_sidecar:
-        if block_store is None:
-            own_store = tempfile.mkdtemp(prefix="csr_blocks_")
-            block_store = own_store
-        spill_csr_blocks(edges_norm, block_store, num_blocks=num_blocks)
-        sidecar_kernel = _make_sidecar_kernel(block_store)
-        blocks = None
-    else:
-        blocks = build_csr_blocks(edges_norm, num_blocks=num_blocks)
-        blocks.count()  # materialize once
+    if block_store is None:
+        own_store = tempfile.mkdtemp(prefix="csr_blocks_")
+        block_store = own_store
+    spill_csr_blocks(edges_norm, block_store, num_blocks=num_blocks)
+    kernel = _make_sidecar_kernel(block_store)
 
-    if vertices is not None:
-        verts = vertices.select("id").dropDuplicates(["id"])
-    else:
-        verts = (
-            edges.select(F.col("src").alias("id"))
-            .unionByName(edges.select(F.col("dst").alias("id")))
-            .dropDuplicates(["id"])
-        )
-    init = verts.join(
-        out_w.select(F.col("src").alias("id"), "out_w"), "id", "left"
-    ).select("id", F.col("out_w").isNull().alias("is_dangling"))
-    counts = init.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("is_dangling").cast("long")).alias("nd"),
-    ).first()
-    n, n_dangling = counts["n"], counts["nd"] or 0
-    if n == 0:
-        raise ValueError("pagerank_csr: empty vertex set")
-    state0 = init.select(
-        "id",
-        F.lit(1.0 / n).alias("rank"),
-        F.lit(0.0).alias("prev_rank"),
-        "is_dangling",
-    )
-    grouped_blocks = blocks.groupBy("pid") if blocks is not None else None
-
-    def step(state: DataFrame, k: int, carry: dict):
-        dangling_mass = carry.get("_dangling")
-        if dangling_mass is None:
-            if k <= 1:
-                dangling_mass = n_dangling / n
-            else:
-                row = state.where("is_dangling").agg(F.sum("rank").alias("m")).first()
-                dangling_mass = row["m"] if row and row["m"] is not None else 0.0
-        dangling_mass = float(dangling_mass)
-        ranks_p = state.select(
-            "id", "rank", F.pmod(F.col("id"), F.lit(num_blocks)).cast("int").alias("pid")
-        )
-        if use_sidecar:
-            partials = ranks_p.groupBy("pid").applyInPandas(
-                sidecar_kernel, schema="dst long, contrib double"
+    def contrib(state: DataFrame) -> DataFrame:
+        return (
+            state.select(
+                "id", "rank", F.pmod(F.col("id"), F.lit(num_blocks)).cast("int").alias("pid")
             )
-        else:
-            partials = ranks_p.groupBy("pid").cogroup(grouped_blocks).applyInPandas(
-                _contrib_kernel, schema="dst long, contrib double"
-            )
-        contribs = (
-            partials.groupBy("dst")
+            .groupBy("pid")
+            .applyInPandas(kernel, schema="dst long, contrib double")
+            .groupBy("dst")
             .agg(F.sum("contrib").alias("contrib"))
             .withColumnRenamed("dst", "id")
-            .hint("shuffle_hash")  # keep the state join off the broadcast-build path
         )
-        base = (1.0 - damping) / n + damping * dangling_mass / n
-        new_state = state.join(contribs, "id", "left").select(
-            "id",
-            (F.lit(base) + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))).alias("rank"),
-            F.col("rank").alias("prev_rank"),
-            "is_dangling",
-        )
-        delta = F.sum(F.abs(F.col("rank") - F.col("prev_rank")))
-        dang = F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias("_dangling")
-        return new_state, delta, [dang]
 
+    state0, step = _program(init, contrib, damping=damping)
     result = iterate(
         spark,
         state0,
@@ -358,8 +205,6 @@ def pagerank_csr(
         storage=storage,
         run_id=run_id,
     )
-    if blocks is not None:
-        blocks.unpersist()
     if own_store is not None:
         shutil.rmtree(own_store, ignore_errors=True)
     return result

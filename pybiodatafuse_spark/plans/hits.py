@@ -89,11 +89,19 @@ def hits(
     state0 = verts.select(
         "id", F.lit(1.0).alias("auth"), F.lit(1.0).alias("hub")
     )
-    init_norm = math.sqrt(float(n))  # ||1-vector||₂, closed-form
+    norm_aggs = [
+        F.sum(F.col("auth") * F.col("auth")).alias("_a2"),
+        F.sum(F.col("hub") * F.col("hub")).alias("_h2"),
+    ]
 
     def step(state: DataFrame, k: int, carry: dict):
-        a_norm = math.sqrt(carry["_a2"]) if "_a2" in carry else init_norm
-        h_norm = math.sqrt(carry["_h2"]) if "_h2" in carry else init_norm
+        # norms of the CURRENT state: carried from the previous superstep's
+        # fused agg; closed-form on the 1-vector init (||1||² = n); a resumed
+        # run's first superstep recomputes them from the checkpointed state
+        if "_a2" not in carry:
+            carry = {"_a2": n, "_h2": n} if k <= 1 else state.agg(*norm_aggs).first()
+        a_norm = math.sqrt(carry["_a2"])
+        h_norm = math.sqrt(carry["_h2"])
         hubs = state.select("id", (F.col("hub") / F.lit(h_norm)).alias("h")).hint(
             "shuffle_hash"
         )
@@ -128,11 +136,7 @@ def hits(
         # delta over the stored (semi-normalized) auth values: they stabilize
         # exactly when the normalized iteration converges
         delta = F.sum(F.abs(F.col("auth") - F.col("prev_auth")))
-        carry_aggs = [
-            F.sum(F.col("auth") * F.col("auth")).alias("_a2"),
-            F.sum(F.col("hub") * F.col("hub")).alias("_h2"),
-        ]
-        return new_state, delta, carry_aggs
+        return new_state, delta, norm_aggs
 
     result: SuperstepResult = iterate(
         spark,

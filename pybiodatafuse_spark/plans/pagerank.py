@@ -19,16 +19,47 @@ Scale design:
 - **One superstep = one join + one partial-aggregated groupBy**; the L1 delta
   is fused into the engine's single materialization action. The dangling-mass
   scalar is a cheap filter+sum on the cached O(V) state.
+
+One program, two physical forms: :func:`_program` owns everything but the
+contribution ``state → (id, contrib)`` — init, dangling mass, teleport, the
+state join and the L1 delta. :func:`pagerank` supplies the salted hop join
+above; ``plans.csr.pagerank_csr`` supplies the CSR block kernel.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate
 from pybiodatafuse_spark.storage import Storage
+
+
+def _graph(edges: DataFrame, vertices: DataFrame | None):
+    """Loop-invariant inputs of both physical forms: out-weights
+    ``(src, out_w, out_deg)``, contribution fractions ``(src, dst, frac)`` and
+    the vertex set ``(id, is_dangling)`` (defaults to the edge endpoints)."""
+    out_w = edges.groupBy("src").agg(
+        F.sum("weight").alias("out_w"), F.count(F.lit(1)).alias("out_deg")
+    )
+    fracs = edges.join(out_w, "src").select(
+        "src", "dst", (F.col("weight") / F.col("out_w")).alias("frac")
+    )
+    if vertices is not None:
+        verts = vertices.select("id").dropDuplicates(["id"])
+    else:
+        verts = (
+            edges.select(F.col("src").alias("id"))
+            .unionByName(edges.select(F.col("dst").alias("id")))
+            .dropDuplicates(["id"])
+        )
+    init = verts.join(
+        out_w.select(F.col("src").alias("id"), "out_deg"), "id", "left"
+    ).select("id", F.col("out_deg").isNull().alias("is_dangling"))
+    return out_w, fracs, init
 
 
 def _prepare(
@@ -38,9 +69,9 @@ def _prepare(
     hub_threshold: int,
     shuffle_partitions: int | None,
 ):
-    out_w = edges.groupBy("src").agg(
-        F.sum("weight").alias("out_w"), F.count(F.lit(1)).alias("out_deg")
-    )
+    """Join-path prep: ``(edges_norm, init, salted)`` with ``edges_norm``
+    hash-partitioned and persisted and ``init(id, is_dangling, is_hub)``."""
+    out_w, fracs, init = _graph(edges, vertices)
     hubs = out_w.where(F.col("out_deg") >= hub_threshold).select(
         F.col("src").alias("id"), F.lit(True).alias("is_hub")
     )
@@ -55,26 +86,20 @@ def _prepare(
     # (separate-executor) scaling near-linear; measured in BENCH/BASELINE.md.
     n_hubs = hubs.count()
     salted = n_hubs > 0 and num_salts > 1
-    edges_norm = edges.join(out_w, "src")
+    edges_norm = fracs
     if salted:
-        edges_norm = edges_norm.join(
-            F.broadcast(hubs), edges["src"] == hubs["id"], "left"
+        edges_norm = fracs.join(
+            F.broadcast(hubs), fracs["src"] == hubs["id"], "left"
         ).select(
-            edges["src"],
-            edges["dst"],
-            (F.col("weight") / F.col("out_w")).alias("frac"),
+            "src",
+            "dst",
+            "frac",
             F.when(
                 F.col("is_hub"), F.pmod(F.xxhash64("dst"), F.lit(num_salts))
             )
             .otherwise(F.lit(0))
             .cast("int")
             .alias("salt"),
-        )
-    else:
-        edges_norm = edges_norm.select(
-            edges["src"],
-            edges["dst"],
-            (F.col("weight") / F.col("out_w")).alias("frac"),
         )
     if shuffle_partitions is None:
         shuffle_partitions = int(
@@ -90,68 +115,25 @@ def _prepare(
     keys = ["src", "salt"] if salted else ["src"]
     edges_norm = edges_norm.repartition(shuffle_partitions, *keys)
     edges_norm = edges_norm.persist(StorageLevel.MEMORY_AND_DISK)
-
-    if vertices is not None:
-        verts = vertices.select("id").dropDuplicates(["id"])
-    else:
-        verts = (
-            edges.select(F.col("src").alias("id"))
-            .unionByName(edges.select(F.col("dst").alias("id")))
-            .dropDuplicates(["id"])
-        )
-    init = (
-        verts.join(out_w.select(F.col("src").alias("id"), "out_deg"), "id", "left")
-        .join(F.broadcast(hubs), "id", "left")
-        .select(
-            "id",
-            F.col("out_deg").isNull().alias("is_dangling"),
-            F.coalesce(F.col("is_hub"), F.lit(False)).alias("is_hub"),
-        )
+    init = init.join(F.broadcast(hubs), "id", "left").select(
+        "id", "is_dangling", F.coalesce(F.col("is_hub"), F.lit(False)).alias("is_hub")
     )
     return edges_norm, init, salted
 
 
-def pagerank(
-    spark: SparkSession,
-    edges: DataFrame,
-    vertices: DataFrame | None = None,
+def _program(
+    init: DataFrame,
+    contrib: Callable[[DataFrame], DataFrame],
     *,
-    damping: float = 0.85,
-    tol: float | None = 1e-6,
-    max_iter: int = 100,
-    num_salts: int = 8,
-    hub_threshold: int = 1000,
-    storage: Storage | None = None,
-    run_id: str | None = None,
-    checkpoint_every: int = 5,
-    shuffle_partitions: int | None = None,
-    resume: bool = False,
+    damping: float,
     reset: DataFrame | None = None,
     init_ranks: DataFrame | None = None,
-) -> SuperstepResult:
-    """Returns SuperstepResult whose state is ``(id, rank, prev_rank, ...)``.
-
-    ``edges(src, dst, weight, ...)``; ``vertices(id, ...)`` optional (defaults
-    to edge endpoints). Ranks sum to 1. With ``resume=True`` (requires
-    storage + run_id), restarts from the last committed checkpoint snapshot
-    (north rule: any run resumable from its last checkpoint).
-
-    ``reset``: optional seed set ``(id, ...)`` → PERSONALIZED PageRank: the
-    teleport vector is uniform over the seeds instead of all vertices, and
-    dangling mass likewise returns to the seeds. ``rank_0 = 1/|S|`` on seeds,
-    0 elsewhere. The uniform path (``reset=None``) keeps its exact per-row
-    expression shape (no extra conditional in the hot superstep).
-
-    ``init_ranks``: optional ``(id, rank)`` WARM START — e.g. yesterday's
-    converged ranks re-ranked over today's crawl delta. New vertices get the
-    uniform prior, then the whole vector is renormalized to sum 1; the
-    fixpoint is init-independent, so warm starts converge in a handful of
-    supersteps instead of O(50) (the incremental path a daily 10^12-page
-    snapshot needs). Incompatible with ``resume`` (checkpoint state wins).
-    """
-    edges_norm, init, salted = _prepare(
-        edges, vertices, num_salts, hub_threshold, shuffle_partitions
-    )
+):
+    """The PageRank program shared by both physical forms. ``init(id,
+    is_dangling, *flags)`` is the vertex set; every non-id column rides along
+    in the state. ``contrib(state)`` is the contribution operator, returning
+    ``(id, contrib)`` = Σ rank·frac over in-edges. Returns ``(state0, step)``
+    for :func:`iterate`; see :func:`pagerank` for ``reset``/``init_ranks``."""
     ppr = reset is not None
     if ppr:
         seeds = (
@@ -178,12 +160,12 @@ def pagerank(
         n, n_dangling = counts["n"], counts["nd"] or 0
     if n == 0:
         raise ValueError("pagerank: empty vertex set")
-    state_cols = ["is_dangling", "is_hub"] + (["is_seed"] if ppr else [])
+    state_cols = [c for c in init.columns if c != "id"]
     if ppr:
         rank0 = F.when(F.col("is_seed"), F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
     else:
         rank0 = F.lit(1.0 / n)
-    warm = init_ranks is not None and not resume
+    warm = init_ranks is not None
     if warm:
         prior = init_ranks.select(
             "id", F.col("rank").cast("double").alias("_warm_rank")
@@ -207,7 +189,6 @@ def pagerank(
             F.lit(0.0).alias("prev_rank"),
             *state_cols,
         )
-    salts = F.sequence(F.lit(0), F.lit(num_salts - 1)).cast("array<int>")
 
     def step(state: DataFrame, k: int, carry: dict):
         # dangling mass of the CURRENT state: fused into the previous
@@ -225,36 +206,8 @@ def pagerank(
                 row = state.where("is_dangling").agg(F.sum("rank").alias("m")).first()
                 dangling_mass = row["m"] if row and row["m"] is not None else 0.0
         dangling_mass = float(dangling_mass)
-        # shuffle_hash hints: the rank side is the small build side — SHJ
-        # avoids re-sorting the (loop-invariant, persisted) edge table every
-        # superstep, and keeps the contribs join off the single-threaded
-        # broadcast-build path (both measured wins; see BENCH/BASELINE.md).
-        if salted:
-            ranks = state.select(
-                "id",
-                "rank",
-                F.explode(
-                    F.when(
-                        F.col("is_hub"), salts
-                    ).otherwise(F.array(F.lit(0).cast("int")))
-                ).alias("salt"),
-            ).hint("shuffle_hash")
-            cond = (ranks["id"] == edges_norm["src"]) & (
-                ranks["salt"] == edges_norm["salt"]
-            )
-        else:
-            # hub-free: no salt column anywhere, so the rank side's
-            # hashpartitioning(id) from the previous superstep's join
-            # satisfies the hop-join distribution — zero rank-side exchange
-            ranks = state.select("id", "rank").hint("shuffle_hash")
-            cond = ranks["id"] == edges_norm["src"]
-        contribs = (
-            ranks.join(edges_norm, cond)
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("frac")).alias("contrib"))
-            .withColumnRenamed("dst", "id")
-            .hint("shuffle_hash")
-        )
+        # shuffle_hash: keep the state join off the broadcast-build path
+        contribs = contrib(state).hint("shuffle_hash")
         if ppr:
             # teleport + dangling mass return only to the seed set
             base_seed = (1.0 - damping) / n_seeds + damping * dangling_mass / n_seeds
@@ -281,16 +234,86 @@ def pagerank(
         )
         return new_state, delta, [next_dangling]
 
-    start_step = 0
-    if resume:
-        if storage is None or run_id is None:
-            raise ValueError("resume requires storage and run_id")
-        last = storage.last_checkpoint_step("pagerank", run_id)
-        if last is None:
-            raise FileNotFoundError(f"no pagerank checkpoint for run {run_id}")
-        state0 = storage.read_checkpoint(spark, "pagerank", run_id, last)
-        start_step = last
+    return state0, step
 
+
+def pagerank(
+    spark: SparkSession,
+    edges: DataFrame,
+    vertices: DataFrame | None = None,
+    *,
+    damping: float = 0.85,
+    tol: float | None = 1e-6,
+    max_iter: int = 100,
+    num_salts: int = 8,
+    hub_threshold: int = 1000,
+    storage: Storage | None = None,
+    run_id: str | None = None,
+    checkpoint_every: int = 5,
+    shuffle_partitions: int | None = None,
+    reset: DataFrame | None = None,
+    init_ranks: DataFrame | None = None,
+) -> SuperstepResult:
+    """Returns SuperstepResult whose state is ``(id, rank, prev_rank, ...)``.
+
+    ``edges(src, dst, weight, ...)``; ``vertices(id, ...)`` optional (defaults
+    to edge endpoints). Ranks sum to 1. Given ``storage`` and the ``run_id``
+    of an interrupted run, continues from its last committed checkpoint
+    (north rule: any run resumable from its last checkpoint; see
+    :func:`iterate`).
+
+    ``reset``: optional seed set ``(id, ...)`` → PERSONALIZED PageRank: the
+    teleport vector is uniform over the seeds instead of all vertices, and
+    dangling mass likewise returns to the seeds. ``rank_0 = 1/|S|`` on seeds,
+    0 elsewhere. The uniform path (``reset=None``) keeps its exact per-row
+    expression shape (no extra conditional in the hot superstep).
+
+    ``init_ranks``: optional ``(id, rank)`` WARM START — e.g. yesterday's
+    converged ranks re-ranked over today's crawl delta. New vertices get the
+    uniform prior, then the whole vector is renormalized to sum 1; the
+    fixpoint is init-independent, so warm starts converge in a handful of
+    supersteps instead of O(50) (the incremental path a daily 10^12-page
+    snapshot needs). A resumed run ignores it (checkpoint state wins).
+    """
+    edges_norm, init, salted = _prepare(
+        edges, vertices, num_salts, hub_threshold, shuffle_partitions
+    )
+    salts = F.sequence(F.lit(0), F.lit(num_salts - 1)).cast("array<int>")
+
+    def contrib(state: DataFrame) -> DataFrame:
+        # shuffle_hash hints: the rank side is the small build side — SHJ
+        # avoids re-sorting the (loop-invariant, persisted) edge table every
+        # superstep, and keeps the contribs join off the single-threaded
+        # broadcast-build path (both measured wins; see BENCH/BASELINE.md).
+        if salted:
+            ranks = state.select(
+                "id",
+                "rank",
+                F.explode(
+                    F.when(
+                        F.col("is_hub"), salts
+                    ).otherwise(F.array(F.lit(0).cast("int")))
+                ).alias("salt"),
+            ).hint("shuffle_hash")
+            cond = (ranks["id"] == edges_norm["src"]) & (
+                ranks["salt"] == edges_norm["salt"]
+            )
+        else:
+            # hub-free: no salt column anywhere, so the rank side's
+            # hashpartitioning(id) from the previous superstep's join
+            # satisfies the hop-join distribution — zero rank-side exchange
+            ranks = state.select("id", "rank").hint("shuffle_hash")
+            cond = ranks["id"] == edges_norm["src"]
+        return (
+            ranks.join(edges_norm, cond)
+            .groupBy("dst")
+            .agg(F.sum(F.col("rank") * F.col("frac")).alias("contrib"))
+            .withColumnRenamed("dst", "id")
+        )
+
+    state0, step = _program(
+        init, contrib, damping=damping, reset=reset, init_ranks=init_ranks
+    )
     result = iterate(
         spark,
         state0,
@@ -301,11 +324,9 @@ def pagerank(
         checkpoint_every=checkpoint_every,
         storage=storage,
         run_id=run_id,
-        start_step=start_step,
     )
     edges_norm.unpersist()
     return result
-
 
 def top_ranks(result: SuperstepResult, k: int = 20) -> DataFrame:
     """Top-k vertices by rank, deterministic tie-break on id (TakeOrdered —

@@ -13,12 +13,14 @@ persist), restated for Spark:
 
 Design notes:
 - ONE action per superstep: ``agg(count(*), <delta_expr>)`` on the persisted
-  new state; per-partition row counts are a second cheap action on cached
-  data when ``partition_metrics`` is on.
+  new state; with storage on, per-partition row counts for run_metadata are a
+  second cheap action on cached data.
 - Lineage is truncated either by the storage checkpoint (parquet/Iceberg
   round-trip) or, without storage, ``localCheckpoint`` — iterative plans
   otherwise grow O(k) and stall the optimizer (SURVEY.md §4 item 2).
-- Resume: :func:`resume` restarts from the last committed snapshot.
+- Resume: :func:`iterate` given storage and the ``run_id`` of a run with a
+  committed snapshot continues from that snapshot, so every algorithm built
+  on it is resumable by re-running it with the same ``run_id``.
 """
 
 from __future__ import annotations
@@ -113,8 +115,6 @@ def iterate(
     checkpoint_every: int = 5,
     storage: Storage | None = None,
     run_id: str | None = None,
-    start_step: int = 0,
-    partition_metrics: bool = True,
     stop_when: Callable[[list[float]], bool] | None = None,
 ) -> SuperstepResult:
     """Run ``step_fn`` to convergence. ``step_fn(state, k)`` returns
@@ -123,131 +123,86 @@ def iterate(
     test, run ``max_iter`` steps).
 
     Convergence: ``stop_when(deltas)`` if given (e.g. fixpoint detection via
-    two equal consecutive state fingerprints), else ``deltas[-1] < tol``."""
+    two equal consecutive state fingerprints), else ``deltas[-1] < tol``.
+
+    Resume: given ``storage`` and a ``run_id`` that already has a committed
+    snapshot for ``algorithm``, ``state`` is ignored and the run continues
+    from the last snapshot's superstep. ``step_fn`` then sees an empty
+    ``carry`` on a superstep ``k > 1``. ``supersteps`` counts from the start
+    of the run, ``deltas``/``walls`` only the supersteps of this call."""
+    step = 0
+    if storage is not None and run_id is not None:
+        step = storage.last_checkpoint_step(algorithm, run_id) or 0
+        if step:
+            state = storage.read_checkpoint(spark, algorithm, run_id, step)
     run_id = run_id or new_run_id()
     with no_aqe(spark):
-        return _iterate_body(
-            spark, state, step_fn, algorithm=algorithm, max_iter=max_iter,
-            tol=tol, checkpoint_every=checkpoint_every, storage=storage,
-            run_id=run_id, start_step=start_step,
-            partition_metrics=partition_metrics, stop_when=stop_when,
-        )
-
-
-def _iterate_body(
-    spark: SparkSession,
-    state: DataFrame,
-    step_fn: StepFn,
-    *,
-    algorithm: str,
-    max_iter: int,
-    tol: float | None,
-    checkpoint_every: int,
-    storage: Storage | None,
-    run_id: str,
-    start_step: int,
-    partition_metrics: bool,
-    stop_when: Callable[[list[float]], bool] | None,
-) -> SuperstepResult:
-    state = state.localCheckpoint(eager=True)
-    rows_in = state.count()
-    deltas: list[float] = []
-    walls: list[float] = []
-    converged = False
-    carry: dict = {}
-    step = start_step
-    for step in range(start_step + 1, max_iter + 1):
-        t0 = time.monotonic()
-        new_state, delta_expr, carry_aggs = step_fn(state, step, carry)
-        # Truncate lineage EVERY superstep: persisted-but-unchecked plans grow
-        # per iteration (exponentially for self-referencing steps like
-        # large-star) and Catalyst/AQE re-analysis comes to dominate wall time.
-        # localCheckpoint materializes to executor-local storage (one job);
-        # durable parquet/Iceberg snapshots below stay on the
-        # `checkpoint_every` cadence for resume.
-        # eager=False: the checkpoint materializes lazily inside the SAME
-        # action as the fused agg below — one Spark job per superstep instead
-        # of two (materialize + agg), halving per-superstep fixed overhead.
-        new_state = new_state.localCheckpoint(eager=False)
-        aggs = [F.count(F.lit(1)).alias("_n")]
-        if delta_expr is not None:
-            aggs.append(delta_expr.alias("_delta"))
-        aggs.extend(carry_aggs or [])
-        row = new_state.agg(*aggs).first()
-        carry = row.asDict()
-        rows_out = row["_n"]
-        delta = float(row["_delta"]) if delta_expr is not None and row["_delta"] is not None else None
-        if delta is not None:
-            deltas.append(delta)
-        if stop_when is not None:
-            hit_tol = bool(deltas) and stop_when(deltas)
-        else:
-            hit_tol = tol is not None and delta is not None and delta < tol
-        is_checkpoint = (
-            storage is not None
-            and (step % checkpoint_every == 0 or hit_tol or step == max_iter)
-        )
-        ckpt_path = None
-        if is_checkpoint:
-            ckpt_path = storage.write_checkpoint(new_state, algorithm, run_id, step)
-            reloaded = storage.read_checkpoint(spark, algorithm, run_id, step)
-            _free(new_state)
-            new_state = reloaded.persist(StorageLevel.MEMORY_AND_DISK)
-        wall = time.monotonic() - t0
-        wall_ms = int(wall * 1000)
-        walls.append(wall)
-        if storage is not None:
-            storage.log_metrics(
-                spark,
-                run_id=run_id,
-                algorithm=algorithm,
-                superstep=step,
-                rows_in=rows_in,
-                rows_out=rows_out,
-                l1_delta=delta,
-                wall_ms=wall_ms,
-                checkpoint_path=ckpt_path,
-                partition_rows=_partition_rows(new_state) if partition_metrics else None,
+        state = state.localCheckpoint(eager=True)
+        rows_in = state.count()
+        deltas: list[float] = []
+        walls: list[float] = []
+        converged = False
+        carry: dict = {}
+        for step in range(step + 1, max_iter + 1):
+            t0 = time.monotonic()
+            new_state, delta_expr, carry_aggs = step_fn(state, step, carry)
+            # Truncate lineage EVERY superstep: persisted-but-unchecked plans
+            # grow per iteration (exponentially for self-referencing steps like
+            # large-star) and Catalyst/AQE re-analysis comes to dominate wall
+            # time. localCheckpoint materializes to executor-local storage (one
+            # job); durable parquet/Iceberg snapshots below stay on the
+            # `checkpoint_every` cadence for resume.
+            # eager=False: the checkpoint materializes lazily inside the SAME
+            # action as the fused agg below — one Spark job per superstep
+            # instead of two (materialize + agg), halving per-superstep fixed
+            # overhead.
+            new_state = new_state.localCheckpoint(eager=False)
+            aggs = [F.count(F.lit(1)).alias("_n")]
+            if delta_expr is not None:
+                aggs.append(delta_expr.alias("_delta"))
+            aggs.extend(carry_aggs or [])
+            row = new_state.agg(*aggs).first()
+            carry = row.asDict()
+            rows_out = row["_n"]
+            delta = float(row["_delta"]) if delta_expr is not None and row["_delta"] is not None else None
+            if delta is not None:
+                deltas.append(delta)
+            if stop_when is not None:
+                hit_tol = bool(deltas) and stop_when(deltas)
+            else:
+                hit_tol = tol is not None and delta is not None and delta < tol
+            is_checkpoint = (
+                storage is not None
+                and (step % checkpoint_every == 0 or hit_tol or step == max_iter)
             )
-        _free(state)
-        state = new_state
-        rows_in = rows_out
-        if hit_tol:
-            converged = True
-            break
+            ckpt_path = None
+            if is_checkpoint:
+                ckpt_path = storage.write_checkpoint(new_state, algorithm, run_id, step)
+                reloaded = storage.read_checkpoint(spark, algorithm, run_id, step)
+                _free(new_state)
+                new_state = reloaded.persist(StorageLevel.MEMORY_AND_DISK)
+            wall = time.monotonic() - t0
+            walls.append(wall)
+            if storage is not None:
+                storage.log_metrics(
+                    spark,
+                    run_id=run_id,
+                    algorithm=algorithm,
+                    superstep=step,
+                    rows_in=rows_in,
+                    rows_out=rows_out,
+                    l1_delta=delta,
+                    wall_ms=int(wall * 1000),
+                    checkpoint_path=ckpt_path,
+                    partition_rows=_partition_rows(new_state),
+                )
+            _free(state)
+            state = new_state
+            rows_in = rows_out
+            if hit_tol:
+                converged = True
+                break
     return SuperstepResult(
         state=state, supersteps=step, deltas=deltas, run_id=run_id,
         converged=converged, walls=walls,
-    )
-
-
-def resume(
-    spark: SparkSession,
-    storage: Storage,
-    step_fn: StepFn,
-    *,
-    algorithm: str,
-    run_id: str,
-    max_iter: int,
-    tol: float | None = None,
-    checkpoint_every: int = 5,
-    partition_metrics: bool = True,
-) -> SuperstepResult:
-    """Resume an interrupted run from its last committed snapshot."""
-    last = storage.last_checkpoint_step(algorithm, run_id)
-    if last is None:
-        raise FileNotFoundError(f"no checkpoint for {algorithm}/{run_id}")
-    state = storage.read_checkpoint(spark, algorithm, run_id, last)
-    return iterate(
-        spark,
-        state,
-        step_fn,
-        algorithm=algorithm,
-        max_iter=max_iter,
-        tol=tol,
-        checkpoint_every=checkpoint_every,
-        storage=storage,
-        run_id=run_id,
-        start_step=last,
-        partition_metrics=partition_metrics,
     )

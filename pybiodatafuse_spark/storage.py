@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import uuid
 from datetime import datetime, timezone
 
@@ -106,11 +107,12 @@ class Storage:
         base = os.path.join(self.root, "checkpoints", algorithm, run_id)
         if not os.path.isdir(base):
             return None
+        # ``step=<k>`` only: a crash between the temp write (which already
+        # wrote _SUCCESS) and the rename leaves a torn ``step=<k>.tmp-<hex>``
         steps = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(base)
-            if d.startswith("step=")
-            and os.path.exists(os.path.join(base, d, "_SUCCESS"))
+            int(m.group(1))
+            for m in map(re.compile(r"step=(\d+)").fullmatch, os.listdir(base))
+            if m and os.path.exists(os.path.join(base, m.group(0), "_SUCCESS"))
         ]
         return max(steps) if steps else None
 

@@ -2,14 +2,15 @@
 
 Runs the full pipeline (pages → extraction → salted edges) or an individual
 algorithm over a prebuilt edge table, with durable checkpoints + run_metadata
-for resume (north rule).
+for resume (north rule): re-running a job with the same ``--run-id`` and
+``--store`` continues from its last committed checkpoint.
 
 Examples:
   spark-submit --py-files dist/pybiodatafuse_spark.zip scripts/run_job.py \\
       pagerank --pages /data/pages --store /data/bdf_store --tol 1e-6
   spark-submit ... run_job.py components --edges /data/edges --out /data/cc
-  spark-submit ... run_job.py resume --algorithm pagerank --run-id abc123 \\
-      --edges /data/edges --store /data/bdf_store
+  spark-submit ... run_job.py pagerank --run-id abc123 \\
+      --edges /data/edges --store /data/bdf_store      # resumes run abc123
 """
 
 from __future__ import annotations
@@ -49,14 +50,14 @@ def main(argv=None):
     p = argparse.ArgumentParser(description="pybiodatafuse_spark job runner")
     p.add_argument("algorithm", choices=[
         "pagerank", "pagerank_csr", "components", "labelprop", "triangles",
-        "summary", "resume", "rdf", "scc", "bowtie", "hits", "kcore",
+        "summary", "rdf", "scc", "bowtie", "hits", "kcore",
         "anf", "scalars", "compact", "expire",
     ])
     p.add_argument("--pages", help="pages table path (runs extraction)")
     p.add_argument("--edges", help="prebuilt edge table path")
     p.add_argument("--out", help="output path (parquet)")
     p.add_argument("--store", help="storage root for checkpoints + run_metadata")
-    p.add_argument("--run-id", help="run id (for resume)")
+    p.add_argument("--run-id", help="run id; an existing one with --store resumes that run")
     p.add_argument("--tol", type=float, default=1e-6)
     p.add_argument("--max-iter", type=int, default=100)
     p.add_argument("--damping", type=float, default=0.85)
@@ -105,15 +106,10 @@ def main(argv=None):
     verts, edges = _build_graph(spark, args)
     result_df, info = None, {}
 
-    if args.algorithm in ("pagerank", "pagerank_csr", "resume"):
+    if args.algorithm in ("pagerank", "pagerank_csr"):
         from pybiodatafuse_spark.plans.pagerank import pagerank
         from pybiodatafuse_spark.plans.csr import pagerank_csr
 
-        if args.algorithm == "resume":
-            if not (storage and args.run_id):
-                p.error("resume requires --store and --run-id")
-            last = storage.last_checkpoint_step("pagerank", args.run_id)
-            info["resumed_from_superstep"] = last
         fn = pagerank_csr if args.algorithm == "pagerank_csr" else pagerank
         kwargs = dict(
             damping=args.damping, tol=args.tol, max_iter=args.max_iter,
@@ -122,14 +118,13 @@ def main(argv=None):
         )
         if fn is pagerank:
             kwargs.update(num_salts=args.num_salts, hub_threshold=args.hub_threshold)
-            if args.algorithm == "resume":
-                kwargs.update(resume=True)
-            elif args.init_ranks:
+            if args.init_ranks:
                 kwargs.update(init_ranks=spark.read.parquet(args.init_ranks))
         res = fn(spark, edges, verts, **kwargs)
         result_df = res.state.select("id", "rank")
         info.update(supersteps=res.supersteps, converged=res.converged,
-                    run_id=res.run_id, final_delta=res.deltas[-1] if res.deltas else None)
+                    run_id=res.run_id, final_delta=res.deltas[-1] if res.deltas else None,
+                    resumed_from_superstep=res.supersteps - len(res.walls))
     elif args.algorithm == "components":
         from pybiodatafuse_spark.plans.components import components
 
@@ -169,11 +164,12 @@ def main(argv=None):
     elif args.algorithm == "hits":
         from pybiodatafuse_spark.plans.hits import hits
 
-        result_df = hits(spark, edges, verts, tol=args.tol, max_iter=args.max_iter)
+        result_df = hits(spark, edges, verts, tol=args.tol, max_iter=args.max_iter,
+                         storage=storage, run_id=args.run_id)
     elif args.algorithm == "kcore":
         from pybiodatafuse_spark.plans.kcore import k_core
 
-        result_df = k_core(spark, edges, k=args.k)
+        result_df = k_core(spark, edges, k=args.k, storage=storage, run_id=args.run_id)
     elif args.algorithm == "anf":
         from pybiodatafuse_spark.plans.bfs import effective_diameter
 

@@ -3,12 +3,129 @@ checkpoint, final state matches the uninterrupted run."""
 
 from __future__ import annotations
 
+import importlib
+import random
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
+from pybiodatafuse_spark.plans.components import components
+from pybiodatafuse_spark.plans.csr import pagerank_csr
+from pybiodatafuse_spark.plans.hits import hits
+from pybiodatafuse_spark.plans.kcore import k_core
+from pybiodatafuse_spark.plans.labelprop import label_propagation
 from pybiodatafuse_spark.plans.pagerank import pagerank
+from pybiodatafuse_spark.plans.superstep import iterate
 from pybiodatafuse_spark.storage import Storage, new_run_id
 from tests.graph_fixture import spark_graph
+
+
+@pytest.fixture(scope="module")
+def tiny_edges(spark):
+    """41 vertices shaped so every iterate user runs several supersteps: a
+    random 30-vertex core, a 4-edge tail path hanging off it (k-core peels
+    it one vertex per round, hash-min floods it one hop per round, its end
+    is dangling), a separate 4-cycle, and three sink vertices."""
+    rng = random.Random(11)
+    es = {(rng.randrange(30), rng.randrange(30)) for _ in range(90)}
+    es = {(u, v) for u, v in es if u != v}
+    es |= {(29 + i, 30 + i) for i in range(4)}
+    es |= {(40, 41), (41, 42), (42, 43), (43, 40), (0, 44), (5, 45), (9, 46)}
+    rows = [(u, v, 1.0 + (7 * u + v) % 3, 1) for u, v in sorted(es)]
+    e = spark.createDataFrame(rows, "src long, dst long, weight double, etype int")
+    return e.cache()
+
+
+def _cells(df) -> dict:
+    """{(id, column): value} — comparable with pytest.approx."""
+    return {(r[0], c): r[c] for r in df.collect() for c in df.columns[1:]}
+
+
+# name → (plan module, run(spark, edges, max_iter, **storage_kw) → cells,
+#         max_iter). Every plan but two_phase stops on an L1-style delta;
+#         two_phase stops on two equal state fingerprints.
+RESUME_CASES = {
+    "pagerank": ("pagerank", lambda s, e, n, **kw: _cells(pagerank(
+        s, e, tol=3e-2, max_iter=n, hub_threshold=5, num_salts=4, **kw
+    ).state.select("id", "rank")), 40),
+    "pagerank_csr": ("csr", lambda s, e, n, **kw: _cells(pagerank_csr(
+        s, e, tol=3e-2, max_iter=n, num_blocks=4, **kw
+    ).state.select("id", "rank")), 40),
+    # this graph's HITS delta settles at a non-zero level: stopped by max_iter
+    "hits": ("hits", lambda s, e, n, **kw: _cells(
+        hits(s, e, tol=None, max_iter=n, **kw)
+    ), 4),
+    "k_core": ("kcore", lambda s, e, n, **kw: _cells(
+        k_core(s, e, k=2, max_rounds=n, **kw)
+    ), 40),
+    "components_two_phase": ("components", lambda s, e, n, **kw: _cells(
+        components(s, e, algorithm="two_phase", max_iter=n, **kw)
+    ), 40),
+    "components_hash_min": ("components", lambda s, e, n, **kw: _cells(
+        components(s, e, algorithm="hash_min", max_iter=n, **kw)
+    ), 40),
+    # synchronous LPA oscillates on this graph: stopped by max_iter
+    "label_propagation": ("labelprop", lambda s, e, n, **kw: _cells(
+        label_propagation(s, e, max_iter=n, **kw)
+    ), 4),
+}
+
+
+@pytest.mark.parametrize("name", list(RESUME_CASES))
+def test_resume_matches_uninterrupted(spark, tiny_edges, tmp_path, monkeypatch, name):
+    """Every iterate() user resumes: a run stopped at superstep k and called
+    again with the same run_id continues from its snapshot and ends where the
+    uninterrupted run ends (1e-12 for scores, exact for labels and cores),
+    with the same per-superstep deltas from k on."""
+    mod_name, run, max_iter = RESUME_CASES[name]
+    k = 2  # the interrupted run's last superstep
+    results = []
+
+    def spy(*a, **kw):
+        results.append(iterate(*a, **kw))
+        return results[-1]
+
+    monkeypatch.setattr(
+        importlib.import_module(f"pybiodatafuse_spark.plans.{mod_name}"), "iterate", spy
+    )
+    want = run(spark, tiny_edges, max_iter)
+    full = results[-1]
+    assert full.supersteps > k + 1
+
+    store = Storage(str(tmp_path / "store"))
+    run_id = new_run_id()
+    run(spark, tiny_edges, k, storage=store, run_id=run_id, checkpoint_every=100)
+    assert results[-1].supersteps == k
+    got = run(spark, tiny_edges, max_iter, storage=store, run_id=run_id, checkpoint_every=100)
+    resumed = results[-1]
+    assert resumed.supersteps - len(resumed.walls) == k  # continued, not restarted
+    assert got == pytest.approx(want, rel=0, abs=1e-12)
+    assert resumed.supersteps == full.supersteps
+    if name != "components_two_phase":
+        assert resumed.deltas == pytest.approx(full.deltas[k:], rel=0, abs=1e-12)
+
+
+def test_torn_snapshot_is_skipped_on_resume(spark, tmp_path):
+    """A crash between the snapshot's temp write (which already wrote
+    _SUCCESS) and its rename leaves ``step=<k>.tmp-<hex>``: resume ignores it
+    and continues from the last committed step."""
+    store = Storage(str(tmp_path / "store"))
+    state0 = spark.range(4).select("id", F.lit(0).alias("x"))
+
+    def step(state, k, carry):
+        return state.select("id", (F.col("x") + 1).alias("x")), None, None
+
+    kw = dict(algorithm="count", storage=store, run_id="r1")
+    iterate(spark, state0, step, max_iter=3, **kw)
+    shutil.copytree(
+        store.checkpoint_path("count", "r1", 3),
+        store.checkpoint_path("count", "r1", 6) + ".tmp-deadbeef",
+    )
+    assert store.last_checkpoint_step("count", "r1") == 3
+    res = iterate(spark, state0, step, max_iter=5, **kw)
+    assert (res.supersteps, len(res.walls)) == (5, 2)
+    assert {r["x"] for r in res.state.collect()} == {5}
 
 
 @pytest.mark.slow_e2e
@@ -27,7 +144,7 @@ def test_interrupt_and_resume_matches_uninterrupted(spark, pages_df, tmp_path):
     )
     resumed = pagerank(
         spark, edges, verts, tol=None, max_iter=12, hub_threshold=5,
-        storage=store, run_id=run_id, checkpoint_every=3, resume=True,
+        storage=store, run_id=run_id, checkpoint_every=3,
     )
     assert resumed.supersteps == 12
 
