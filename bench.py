@@ -146,9 +146,7 @@ def compact_summary(result: dict) -> dict:
         c["pairs_executors"] = se.get("all_pairs_efficiency")
     sh = result.get("scaling_executors_hi")
     if sh is not None:
-        c["efficiency_4n_to_16n_executors"] = sh.get(
-            "efficiency_n_to_4n_executors"
-        )
+        c["efficiency_4n_to_16n_executors"] = sh.get("efficiency_4n_to_16n_executors")
     if "wall_total_sec" in result:
         c["wall_total_sec"] = result["wall_total_sec"]
     return c
@@ -625,8 +623,8 @@ def main():
 
                 def on_exec_hi_pair(runs, skipped, error=None):
                     block, eff, q_med = pairs_block(runs, skipped, h_static, error)
-                    block["efficiency_n_to_4n_executors"] = eff
-                    block["efficiency_n_to_4n_executors_quiet"] = q_med
+                    block["efficiency_4n_to_16n_executors"] = eff
+                    block["efficiency_4n_to_16n_executors_quiet"] = q_med
                     result["scaling_executors_hi"] = block
                     emit()
 

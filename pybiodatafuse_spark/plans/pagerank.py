@@ -229,9 +229,11 @@ def _program(
             )
         )
         delta = F.sum(F.abs(F.col("rank") - F.col("prev_rank")))
-        next_dangling = F.sum(F.when(F.col("is_dangling"), F.col("rank"))).alias(
-            "_dangling"
-        )
+        # otherwise(0.0): with no dangling vertex the carry must be 0, not
+        # null — a null carry reads as "unknown" and re-runs the recompute job
+        next_dangling = F.sum(
+            F.when(F.col("is_dangling"), F.col("rank")).otherwise(0.0)
+        ).alias("_dangling")
         return new_state, delta, [next_dangling]
 
     return state0, step

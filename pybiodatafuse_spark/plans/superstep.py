@@ -6,15 +6,25 @@ generate_embeddings.py:165-188``: iterate → L1-delta convergence test →
 persist), restated for Spark:
 
     state_{k+1} = step_fn(state_k, k)        # pure DataFrame program
-    materialize (persist + single fused agg action → rows_out, L1 delta)
+    materialize (persist + single fused agg action → rows_out, L1 delta,
+    carried scalars and, with storage on, per-partition row counts)
     every `checkpoint_every` steps: write snapshot (lineage truncation + resume
-    point) and log per-partition lineage + metrics to the run_metadata table
+    point), then commit the buffered run_metadata rows of the supersteps since
+    the last snapshot
     stop when delta < tol or k == max_iter
 
 Design notes:
-- ONE action per superstep: ``agg(count(*), <delta_expr>)`` on the persisted
-  new state; with storage on, per-partition row counts for run_metadata are a
-  second cheap action on cached data.
+- ONE action per superstep: ``groupBy(<keys>).agg(count(*), <delta_expr>,
+  *<carry_aggs>)`` on the new state, whose partials the driver adds up. With
+  storage on the key is ``spark_partition_id()``, so the same action yields
+  the per-partition row counts for run_metadata; without storage the key list
+  is empty and it is one global aggregate.
+- run_metadata rows are committed once per durable checkpoint, right after
+  the snapshot is published, as one driver-written file. Every returning run
+  ends on a checkpoint, and a resumed run recomputes and logs the supersteps
+  after its snapshot, so each superstep has its rows exactly once. A crash
+  between the snapshot rename and the metrics commit loses that segment's
+  rows; it never duplicates them.
 - Lineage is truncated either by the storage checkpoint (parquet/Iceberg
   round-trip) or, without storage, ``localCheckpoint`` — iterative plans
   otherwise grow O(k) and stall the optimizer (SURVEY.md §4 item 2).
@@ -40,6 +50,9 @@ from pybiodatafuse_spark.storage import Storage, new_run_id
 #   carry: dict of scalar values from the previous superstep's fused agg action
 #   carry_aggs: extra aliased aggregate Columns evaluated over new_state in the
 #   SAME action as the delta (zero extra Spark jobs) and handed to the next call
+#   delta_expr and carry_aggs must be additive sums (F.sum of a per-row term):
+#   with storage on they are computed per partition and added up on the
+#   driver, null partials skipped (all-null stays null, as in SQL)
 StepFn = Callable[
     [DataFrame, int, dict],
     tuple[DataFrame, "Column | None", "list[Column] | None"],
@@ -56,9 +69,10 @@ class SuperstepResult:
     walls: list[float] = field(default_factory=list)  # per-superstep seconds
 
 
-def _partition_rows(df: DataFrame) -> dict[int, int]:
-    rows = df.groupBy(F.spark_partition_id().alias("pid")).count().collect()
-    return {r["pid"]: r["count"] for r in rows}
+def _add(values) -> int | float | None:
+    """SQL ``sum`` over partials: nulls skipped, all-null (or none) → null."""
+    values = [v for v in values if v is not None]
+    return sum(values) if values else None
 
 
 @contextlib.contextmanager
@@ -137,12 +151,14 @@ def iterate(
             state = storage.read_checkpoint(spark, algorithm, run_id, step)
     run_id = run_id or new_run_id()
     with no_aqe(spark):
-        state = state.localCheckpoint(eager=True)
-        rows_in = state.count()
+        state = state.localCheckpoint(eager=False)
+        rows_in = state.count() if storage is not None else None  # metrics only
         deltas: list[float] = []
         walls: list[float] = []
+        pending: list[dict] = []  # run_metadata rows since the last snapshot
         converged = False
         carry: dict = {}
+        keys = [F.spark_partition_id().alias("_pid")] if storage is not None else []
         for step in range(step + 1, max_iter + 1):
             t0 = time.monotonic()
             new_state, delta_expr, carry_aggs = step_fn(state, step, carry)
@@ -161,10 +177,13 @@ def iterate(
             if delta_expr is not None:
                 aggs.append(delta_expr.alias("_delta"))
             aggs.extend(carry_aggs or [])
-            row = new_state.agg(*aggs).first()
-            carry = row.asDict()
-            rows_out = row["_n"]
-            delta = float(row["_delta"]) if delta_expr is not None and row["_delta"] is not None else None
+            partials = new_state.groupBy(*keys).agg(*aggs)
+            cols = [c for c in partials.columns if c != "_pid"]
+            # in pid order: r[0] is the key; without keys there is one row
+            parts = sorted(partials.coalesce(1).collect(), key=lambda r: r[0])
+            carry = {c: _add(r[c] for r in parts) for c in cols}
+            rows_out = carry["_n"] or 0
+            delta = float(carry["_delta"]) if carry.get("_delta") is not None else None
             if delta is not None:
                 deltas.append(delta)
             if stop_when is not None:
@@ -184,18 +203,18 @@ def iterate(
             wall = time.monotonic() - t0
             walls.append(wall)
             if storage is not None:
-                storage.log_metrics(
-                    spark,
-                    run_id=run_id,
-                    algorithm=algorithm,
+                pending.append(dict(
                     superstep=step,
                     rows_in=rows_in,
                     rows_out=rows_out,
                     l1_delta=delta,
                     wall_ms=int(wall * 1000),
                     checkpoint_path=ckpt_path,
-                    partition_rows=_partition_rows(new_state),
-                )
+                    partition_rows={r["_pid"]: r["_n"] for r in parts},
+                ))
+            if is_checkpoint:
+                storage.log_metrics(spark, run_id=run_id, algorithm=algorithm, supersteps=pending)
+                pending = []
             _free(state)
             state = new_state
             rows_in = rows_out

@@ -35,8 +35,10 @@ import re
 import uuid
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from pybiodatafuse_spark.schema import RUN_METADATA_SCHEMA
 
@@ -164,15 +166,31 @@ class Storage:
 
         return held()
 
-    def append(self, df: DataFrame, name: str) -> int:
+    def _write_log(self, name: str, snaps: list[dict]) -> None:
+        """Commit ``snaps`` as the table's snapshot log: one atomic
+        metadata-pointer swap (``os.replace`` of a fully written temp file).
+        The caller holds the commit lock."""
+        tmp = self._metadata_file(name) + f".tmp-{uuid.uuid4().hex[:8]}"
+        with open(tmp, "w") as fh:
+            json.dump({"format_version": 1, "snapshots": snaps}, fh)
+        os.replace(tmp, self._metadata_file(name))
+
+    def append(self, data: DataFrame | pa.Table, name: str) -> int:
         """Snapshot-commit append (Iceberg model): data lands in an immutable
         ``snap-*`` dir; the commit is one atomic metadata-pointer swap,
         serialized by a lock so concurrent appends can't drop each other's
         snapshots. Returns the new snapshot id.
 
+        ``data`` is a DataFrame (written by Spark) or a small
+        ``pyarrow.Table`` (written by the driver, no Spark job).
+
         In ``iceberg`` mode this is a real ``writeTo(...).append()`` against
         the configured catalog (requires iceberg runtime jars)."""
         if self.table_format == "iceberg":
+            df = (
+                SparkSession.active().createDataFrame(data)
+                if isinstance(data, pa.Table) else data
+            )
             self._require_iceberg(df.sparkSession)
             ident = self._iceberg_ident(name)
             df.writeTo(ident).createOrReplace() if not df.sparkSession.catalog.tableExists(
@@ -187,7 +205,11 @@ class Storage:
         # data files land OUTSIDE the lock (the slow part, parallel-safe:
         # uuid dir names can't collide); only the pointer swap is serialized
         data_dir = os.path.join(base, f"snap-{uuid.uuid4().hex[:12]}")
-        df.write.mode("overwrite").parquet(data_dir)
+        if isinstance(data, pa.Table):
+            os.makedirs(data_dir)
+            pq.write_table(data, os.path.join(data_dir, "part-00000.parquet"))
+        else:
+            data.write.mode("overwrite").parquet(data_dir)
         with self._commit_lock(name):
             snaps = self.snapshots(name)  # re-read under the lock
             snap_id = (snaps[-1]["id"] + 1) if snaps else 1
@@ -198,10 +220,7 @@ class Storage:
                     "dir": os.path.basename(data_dir),
                 }
             )
-            tmp = self._metadata_file(name) + f".tmp-{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                json.dump({"format_version": 1, "snapshots": snaps}, fh)
-            os.replace(tmp, self._metadata_file(name))  # the atomic commit
+            self._write_log(name, snaps)
         return snap_id
 
     def read_table(
@@ -335,10 +354,7 @@ class Storage:
                             "base": True,
                         }
                     )
-                    tmp = self._metadata_file(name) + f".tmp-{uuid.uuid4().hex[:8]}"
-                    with open(tmp, "w") as fh:
-                        json.dump({"format_version": 1, "snapshots": snaps}, fh)
-                    os.replace(tmp, self._metadata_file(name))
+                    self._write_log(name, snaps)
                     return snap_id
             # conflicting commit landed during the rewrite: discard and retry
             shutil.rmtree(data_dir, ignore_errors=True)
@@ -381,11 +397,7 @@ class Storage:
             dropped = [s for s in snaps[:-keep_last] if s["dir"] not in needed]
             expired = [s["id"] for s in dropped]
             removed_dirs = [s["dir"] for s in dropped]
-            new_log = [s for s in snaps if s["id"] not in set(expired)]
-            tmp = self._metadata_file(name) + f".tmp-{uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as fh:
-                json.dump({"format_version": 1, "snapshots": new_log}, fh)
-            os.replace(tmp, self._metadata_file(name))
+            self._write_log(name, [s for s in snaps if s["id"] not in set(expired)])
         import shutil
 
         for d in removed_dirs:
@@ -400,48 +412,26 @@ class Storage:
         *,
         run_id: str,
         algorithm: str,
-        superstep: int,
-        rows_in: int | None,
-        rows_out: int | None,
-        l1_delta: float | None,
-        wall_ms: int,
-        checkpoint_path: str | None,
-        partition_rows: dict[int, int] | None = None,
+        supersteps: list[dict],
     ) -> None:
+        """Commit the run_metadata rows of ``supersteps`` as ONE snapshot.
+        Each entry holds ``superstep``, ``rows_in``, ``rows_out``,
+        ``l1_delta``, ``wall_ms``, ``checkpoint_path`` and
+        ``partition_rows`` ({partition id: rows}); it becomes one
+        ``partition_id = -1`` row plus one row per partition. The rows are
+        O(supersteps × partitions), so the driver writes them as one file."""
         now = datetime.now(timezone.utc)
-        rows = [
-            Row(
-                run_id=run_id,
-                algorithm=algorithm,
-                superstep=superstep,
-                partition_id=-1,
-                rows_in=rows_in,
-                rows_out=rows_out,
-                l1_delta=l1_delta,
-                wall_ms=wall_ms,
-                checkpoint_path=checkpoint_path,
-                ts=now,
-            )
-        ]
-        for pid, cnt in (partition_rows or {}).items():
-            rows.append(
-                Row(
-                    run_id=run_id,
-                    algorithm=algorithm,
-                    superstep=superstep,
-                    partition_id=int(pid),
-                    rows_in=None,
-                    rows_out=int(cnt),
-                    l1_delta=None,
-                    wall_ms=None,
-                    checkpoint_path=checkpoint_path,
-                    ts=now,
-                )
-            )
-        # coalesce(1): a metrics append is O(partitions) rows — one file per
-        # snapshot-commit, not one per task
+        rows = []
+        for s in supersteps:
+            key = dict(run_id=run_id, algorithm=algorithm, superstep=s["superstep"],
+                       checkpoint_path=s["checkpoint_path"], ts=now)
+            rows.append(dict(key, partition_id=-1, rows_in=s["rows_in"],
+                             rows_out=s["rows_out"], l1_delta=s["l1_delta"],
+                             wall_ms=s["wall_ms"]))
+            for pid, cnt in sorted(s["partition_rows"].items()):
+                rows.append(dict(key, partition_id=int(pid), rows_out=int(cnt)))
         self.append(
-            spark.createDataFrame(rows, RUN_METADATA_SCHEMA).coalesce(1),
+            pa.Table.from_pylist(rows, schema=to_arrow_schema(RUN_METADATA_SCHEMA)),
             RUN_METADATA_TABLE,
         )
 

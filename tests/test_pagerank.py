@@ -109,10 +109,12 @@ def test_checkpoint_resume_and_metrics(spark, graph, tmp_path):
     assert glob.count() == 6  # one global row per superstep
     assert glob.where(F.col("l1_delta").isNull()).count() == 0
     per_part = metrics.where("partition_id >= 0")
-    total_rows = (
-        per_part.where("superstep = 6").agg(F.sum("rows_out").alias("s")).first()["s"]
-    )
-    assert total_rows == N  # per-partition lineage sums to the state size
+    total_rows = {
+        r["superstep"]: r["s"]
+        for r in per_part.groupBy("superstep").agg(F.sum("rows_out").alias("s")).collect()
+    }
+    # every superstep's per-partition lineage sums to the state size
+    assert total_rows == {k: N for k in range(1, 7)}
 
 
 def test_warm_start_converges_fast_and_exact(spark, graph, converged):

@@ -260,3 +260,76 @@ def test_anf_hll_union_is_partial_aggregated(spark):
     assert plan.count("ObjectHashAggregate") >= 2, plan
     assert "partial_hll_union_agg" in plan or "partial_hllunionagg" in plan.lower(), plan
     e.unpersist()
+
+
+def _count_jobs(spark, monkeypatch, run) -> dict:
+    """Run ``run()`` with each PageRank superstep in its own job group.
+    Returns {superstep: Spark jobs it started}, key 0 for the jobs before the
+    first superstep. A superstep's group spans its step function, its fused
+    action, its checkpoint and its metrics commit."""
+    import uuid
+
+    import pybiodatafuse_spark.plans.pagerank as pr
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    steps = [0]
+    orig = pr.iterate
+
+    def spy(spark_, state, step_fn, **kw):
+        def step(st, k, carry):
+            steps.append(k)
+            sc.setJobGroup(f"{tag}-{k}", "superstep")
+            return step_fn(st, k, carry)
+
+        return orig(spark_, state, step, **kw)
+
+    sc.setJobGroup(f"{tag}-0", "prep")
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(pr, "iterate", spy)
+            run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    return {k: len(st.getJobIdsForGroup(f"{tag}-{k}")) for k in steps}
+
+
+def _cycle_edges(spark, n: int, sink: bool):
+    rows = [(i, (i + 1) % n, 1.0, 1) for i in range(n)]
+    if sink:
+        rows.append((0, n, 1.0, 1))  # vertex n has no out-edge: dangling
+    return spark.createDataFrame(rows, "src long, dst long, weight double, etype int")
+
+
+def test_dangling_free_graph_runs_no_extra_jobs(spark, monkeypatch):
+    """The dangling-mass carry is 0, not null, when no vertex is dangling: a
+    null carry would re-run the recompute-from-state job every superstep."""
+    from pybiodatafuse_spark.plans.pagerank import pagerank
+
+    def jobs(sink):
+        edges = _cycle_edges(spark, 12, sink)
+        return sum(_count_jobs(spark, monkeypatch, lambda: pagerank(
+            spark, edges, tol=None, max_iter=4, hub_threshold=1000
+        )).values())
+
+    assert jobs(sink=False) == jobs(sink=True)
+
+
+@pytest.mark.parametrize("durable", [False, True], ids=["storage_off", "storage_on"])
+def test_one_job_per_non_checkpoint_superstep(spark, monkeypatch, tmp_path, durable):
+    """A superstep that writes no snapshot is ONE Spark job, storage on or
+    off: with storage on, the per-partition row counts come from the fused
+    action and the run_metadata rows wait for the next checkpoint."""
+    from pybiodatafuse_spark.plans.pagerank import pagerank
+    from pybiodatafuse_spark.storage import Storage
+
+    edges = _cycle_edges(spark, 12, sink=True)
+    kw = dict(storage=Storage(str(tmp_path / "store")), checkpoint_every=3) if durable else {}
+    jobs = _count_jobs(spark, monkeypatch, lambda: pagerank(
+        spark, edges, tol=None, max_iter=4, hub_threshold=1000, **kw
+    ))
+    # superstep 1 also materializes the loop-invariant inputs (edge table,
+    # initial state); with storage on, 3 and 4 write snapshots
+    non_checkpoint = [2] if durable else [2, 3, 4]
+    assert {k: jobs[k] for k in non_checkpoint} == {k: 1 for k in non_checkpoint}

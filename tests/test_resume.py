@@ -128,6 +128,73 @@ def test_torn_snapshot_is_skipped_on_resume(spark, tmp_path):
     assert {r["x"] for r in res.state.collect()} == {5}
 
 
+def test_run_metadata_exactly_once_across_resume(spark, tmp_path):
+    """run_metadata rows commit with the snapshot: a run that dies at
+    superstep 5 (snapshot at 3) loses step 4's pending row, and the resumed
+    run logs 4-6 once — one partition_id = -1 row per superstep."""
+    store = Storage(str(tmp_path / "store"))
+    state0 = spark.range(6).select("id", F.lit(0).alias("x"))
+    crash_at = 5
+
+    def step(state, k, carry):
+        if k == crash_at:
+            raise RuntimeError("crash")
+        new = state.select("id", (F.col("x") + 1).alias("x"))
+        return new, F.sum(F.lit(1.0)), None
+
+    kw = dict(algorithm="toy", storage=store, run_id="r1", checkpoint_every=3)
+    with pytest.raises(RuntimeError, match="crash"):
+        iterate(spark, state0, step, max_iter=6, **kw)
+    crash_at = None
+    res = iterate(spark, state0, step, max_iter=6, **kw)
+    assert (res.supersteps, len(res.walls)) == (6, 3)
+    metrics = store.read_metrics(spark).where(F.col("run_id") == "r1").collect()
+    glob = sorted(r["superstep"] for r in metrics if r["partition_id"] == -1)
+    assert glob == [1, 2, 3, 4, 5, 6]
+    per_step = {}
+    for r in metrics:
+        if r["partition_id"] >= 0:
+            per_step[r["superstep"]] = per_step.get(r["superstep"], 0) + r["rows_out"]
+    assert per_step == {k: 6 for k in range(1, 7)}
+
+
+def test_driver_and_spark_written_snapshots_read_back(spark, tmp_path):
+    """A table may mix Spark-written (DataFrame) and driver-written
+    (pyarrow.Table) snapshots: every row reads back through read_table and
+    read_metrics with the run_metadata types."""
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from pybiodatafuse_spark.schema import RUN_METADATA_SCHEMA
+    from pybiodatafuse_spark.storage import RUN_METADATA_TABLE
+
+    ts = datetime(2024, 5, 1, 12, 30, tzinfo=timezone.utc)
+    row = dict(run_id="r", algorithm="a", partition_id=-1, rows_in=3,
+               rows_out=3, l1_delta=0.5, wall_ms=7, checkpoint_path=None, ts=ts)
+    store = Storage(str(tmp_path / "store"))
+    store.append(
+        spark.createDataFrame([dict(row, superstep=1)], RUN_METADATA_SCHEMA),
+        RUN_METADATA_TABLE,
+    )
+    store.append(
+        pa.Table.from_pylist([dict(row, superstep=2)],
+                             schema=to_arrow_schema(RUN_METADATA_SCHEMA)),
+        RUN_METADATA_TABLE,
+    )
+    assert [s["id"] for s in store.snapshots(RUN_METADATA_TABLE)] == [1, 2]
+    table = store.read_table(spark, RUN_METADATA_TABLE)
+    types = {f.name: f.dataType for f in table.schema.fields}
+    assert types == {f.name: f.dataType for f in RUN_METADATA_SCHEMA.fields}
+    got = [r.asDict() for r in store.read_metrics(spark).collect()]
+    want = [dict(row, superstep=k) for k in (1, 2)]
+    # Spark returns session-local naive timestamps: compare the two files'
+    # instants with each other, every other column with what was written
+    assert isinstance(got[0]["ts"], datetime) and got[0]["ts"] == got[1]["ts"]
+    assert [dict(r, ts=ts) for r in got] == want
+
+
 @pytest.mark.slow_e2e
 def test_interrupt_and_resume_matches_uninterrupted(spark, pages_df, tmp_path):
     verts, edges = spark_graph(pages_df)
