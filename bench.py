@@ -168,10 +168,12 @@ def emit_snapshot(result: dict) -> None:
         sys.stderr.write(f"last_run.json mirror failed: {exc!r}\n")
     print(json.dumps(result), flush=True)
     line = json.dumps(compact_summary(result))
-    assert len(line) < 1500, (
+    msg = (
         f"compact bench line is {len(line)} chars — exceeds the driver's "
         f"2000-char stdout-tail budget margin; trim compact_summary()"
     )
+    if len(line) >= 1500:
+        raise RuntimeError(msg)
     print(line, flush=True)
 
 

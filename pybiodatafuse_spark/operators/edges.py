@@ -12,9 +12,9 @@ Scale design:
 - vertex id = ``xxhash64(canonical_url)`` → dst ids computable WITHOUT a join
   against the vertex table (pure projection; no shuffle at extraction time).
 - duplicate links collapse into ``weight`` via map-side-combinable sum.
-- skew: a ``salt`` column splits high-degree sources across
-  ``num_salts`` buckets so no single shuffle partition serializes a hub
-  domain (SURVEY.md §4 item 1); AQE skew-join stays on as backstop.
+- skew: edges carry no salt; PageRank salts hub-source edges itself
+  (``plans.pagerank._prepare``, SURVEY.md §4 item 1) and AQE skew-join is
+  the backstop for the non-iterative joins here.
 - ``restrict_to_corpus`` drops edges whose dst is not a crawled page
   (left-semi join against vertices — broadcast when vertices are small,
   shuffle-hash otherwise; Catalyst/AQE picks).
@@ -91,18 +91,6 @@ def build_edges(
     )
 
 
-def with_salt(edges: DataFrame, num_salts: int = 8) -> DataFrame:
-    """Generic deterministic salt bucket per edge (hash of dst) — for
-    spreading a single hot key across partitions in aggregations.
-
-    NOTE: the PageRank join path does NOT use this; it salts hub-source
-    edges only (non-hub salt = 0) inside ``plans.pagerank._prepare`` so the
-    rank side replicates exclusively for hubs."""
-    return edges.withColumn(
-        "salt", F.pmod(F.xxhash64("dst"), F.lit(num_salts)).cast("int")
-    )
-
-
 def degrees(edges: DataFrame) -> DataFrame:
     """out_deg / in_deg per vertex id (weighted out-degree included).
 
@@ -124,6 +112,18 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     return fwd.unionByName(rev).where(F.col("src") != F.col("dst")).dropDuplicates(
         ["src", "dst"]
+    )
+
+
+def vertex_ids(edges: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
+    """Vertex set ``(id)``, deduplicated: ``vertices.id`` when given, else
+    the edge endpoints."""
+    if vertices is not None:
+        return vertices.select("id").dropDuplicates(["id"])
+    return (
+        edges.select(F.col("src").alias("id"))
+        .unionByName(edges.select(F.col("dst").alias("id")))
+        .dropDuplicates(["id"])
     )
 
 

@@ -31,38 +31,19 @@ Three operators:
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.plans.superstep import no_aqe
+from pybiodatafuse_spark.operators.edges import vertex_ids
+from pybiodatafuse_spark.plans.superstep import no_aqe, pinned
 
 
-def _parts(spark: SparkSession) -> int:
-    return int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
-
-
-def _pin_edges(edges: DataFrame, key: str = "src") -> DataFrame:
-    out = (
+def _simple(edges: DataFrame) -> DataFrame:
+    """``(src, dst)`` without self-loops or parallel edges."""
+    return (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
-        .repartition(_parts(edges.sparkSession), key)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    out.count()
-    return out
-
-
-def _vertices(edges: DataFrame) -> DataFrame:
-    return (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .dropDuplicates(["id"])
     )
 
 
@@ -89,22 +70,22 @@ def bfs_distances(
     seed domains" at crawl scale). Default cap matches the 300-level
     recursive-CTE unroll of the q55/q61 DuckDB oracles.
     """
-    with no_aqe(spark):
-        e = _pin_edges(edges, "src")
-        reached = _ckpt(
-            seeds.select("id").dropDuplicates(["id"]).select(
-                "id", F.lit(0).cast("long").alias("dist")
-            )
+    with no_aqe(spark), pinned(_simple(edges), "src") as e:
+        reached = (
+            seeds.select("id").dropDuplicates(["id"])
+            .select("id", F.lit(0).cast("long").alias("dist"))
+            .localCheckpoint(eager=True)
         )
         frontier = reached
         for h in range(1, max_hops + 2):
-            nxt = _ckpt(
+            nxt = (
                 frontier.hint("shuffle_hash")
                 .join(e, frontier["id"] == e["src"])
                 .select(F.col("dst").alias("id"))
                 .dropDuplicates(["id"])
                 .join(reached.select("id"), "id", "left_anti")
                 .select("id", F.lit(h).cast("long").alias("dist"))
+                .localCheckpoint(eager=True)
             )
             if nxt.isEmpty():
                 break
@@ -118,9 +99,8 @@ def bfs_distances(
                     f"{max_hops} hops; raise max_hops or pass "
                     f"allow_truncate=True"
                 )
-            reached = _ckpt(reached.unionByName(nxt))
+            reached = reached.unionByName(nxt).localCheckpoint(eager=True)
             frontier = nxt
-        e.unpersist()
         return reached
 
 
@@ -146,22 +126,22 @@ def harmonic_centrality(
     pairs would still be expanding past ``max_hops`` unless
     ``allow_truncate=True`` (bounded-radius estimator mode).
     """
-    with no_aqe(spark):
-        e = _pin_edges(edges, "src")
-        reached = _ckpt(
-            sources.select("id").dropDuplicates(["id"]).select(
-                F.col("id").alias("s"), F.col("id"), F.lit(0).cast("long").alias("dist")
-            )
+    with no_aqe(spark), pinned(_simple(edges), "src") as e:
+        reached = (
+            sources.select("id").dropDuplicates(["id"])
+            .select(F.col("id").alias("s"), F.col("id"), F.lit(0).cast("long").alias("dist"))
+            .localCheckpoint(eager=True)
         )
         frontier = reached
         for h in range(1, max_hops + 2):
-            nxt = _ckpt(
+            nxt = (
                 frontier.hint("shuffle_hash")
                 .join(e, frontier["id"] == e["src"])
                 .select("s", F.col("dst").alias("id"))
                 .dropDuplicates(["s", "id"])
                 .join(reached.select("s", "id"), ["s", "id"], "left_anti")
                 .select("s", "id", F.lit(h).cast("long").alias("dist"))
+                .localCheckpoint(eager=True)
             )
             if nxt.isEmpty():
                 break
@@ -173,9 +153,8 @@ def harmonic_centrality(
                     f"{max_hops} hops; raise max_hops or pass "
                     f"allow_truncate=True"
                 )
-            reached = _ckpt(reached.unionByName(nxt))
+            reached = reached.unionByName(nxt).localCheckpoint(eager=True)
             frontier = nxt
-        e.unpersist()
         return (
             reached.where(F.col("dist") > 0)
             .groupBy("id")
@@ -192,25 +171,26 @@ def neighborhood_sizes(
     """EXACT ``(id, n_within)``: distinct vertices within ≤ ``hops`` forward
     hops of each vertex, self included. Materializes the bounded closure —
     use :func:`anf_hll` at scale."""
-    with no_aqe(spark):
-        e = _pin_edges(edges, "src")
-        verts = _vertices(e)
+    with no_aqe(spark), pinned(_simple(edges), "src") as e:
+        verts = vertex_ids(e)
         # pairs (origin a, reached b); frontier = pairs added last hop
-        pairs = _ckpt(verts.select(F.col("id").alias("a"), F.col("id").alias("b")))
+        pairs = verts.select(
+            F.col("id").alias("a"), F.col("id").alias("b")
+        ).localCheckpoint(eager=True)
         frontier = pairs
         for _ in range(hops):
-            nxt = _ckpt(
+            nxt = (
                 frontier.hint("shuffle_hash")
                 .join(e, frontier["b"] == e["src"])
                 .select("a", F.col("dst").alias("b"))
                 .dropDuplicates(["a", "b"])
                 .join(pairs, ["a", "b"], "left_anti")
+                .localCheckpoint(eager=True)
             )
             if nxt.isEmpty():
                 break
-            pairs = _ckpt(pairs.unionByName(nxt))
+            pairs = pairs.unionByName(nxt).localCheckpoint(eager=True)
             frontier = nxt
-        e.unpersist()
         return pairs.groupBy(F.col("a").alias("id")).agg(
             F.count(F.lit(1)).alias("n_within")
         )
@@ -229,13 +209,14 @@ def anf_hll(
     hops)``. Also the building block for effective-diameter estimation:
     run with increasing ``hops`` until ``sum(n_est)`` plateaus.
     """
-    with no_aqe(spark):
-        parts = _parts(spark)
-        e = _pin_edges(edges, "dst")  # flood pulls FROM dst, groups BY src
-        verts = _vertices(e)
-        sk = _ckpt(
+    # flood pulls FROM dst, groups BY src
+    with no_aqe(spark), pinned(_simple(edges), "dst") as e:
+        verts = vertex_ids(e)
+        sk = (
             verts.groupBy("id").agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
-        ).repartition(parts, "id")
+            .localCheckpoint(eager=True)
+            .repartition("id")
+        )
         for _ in range(hops):
             nbr = (
                 sk.hint("shuffle_hash")
@@ -243,7 +224,7 @@ def anf_hll(
                 .groupBy(F.col("src").alias("id"))
                 .agg(F.hll_union_agg("sk").alias("nbr_sk"))
             )
-            sk = _ckpt(
+            sk = (
                 sk.join(nbr, "id", "left").select(
                     "id",
                     F.when(
@@ -252,8 +233,8 @@ def anf_hll(
                         F.hll_union("sk", "nbr_sk")
                     ).alias("sk"),
                 )
+                .localCheckpoint(eager=True)
             )
-        e.unpersist()
         return sk.select("id", F.hll_sketch_estimate("sk").alias("n_est"))
 
 
@@ -268,11 +249,11 @@ def effective_diameter(
     """ANF-based effective diameter: smallest ``h`` where the total
     reachable-pair estimate reaches ``quantile`` of its converged value.
     Returns ``(h_eff, per_hop_totals)``. One HLL flood, one pass."""
-    with no_aqe(spark):
-        e = _pin_edges(edges, "dst")
-        verts = _vertices(e)
-        sk = _ckpt(
+    with no_aqe(spark), pinned(_simple(edges), "dst") as e:
+        verts = vertex_ids(e)
+        sk = (
             verts.groupBy("id").agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
+            .localCheckpoint(eager=True)
         )
         totals: list[float] = []
         prev = None
@@ -283,13 +264,14 @@ def effective_diameter(
                 .groupBy(F.col("src").alias("id"))
                 .agg(F.hll_union_agg("sk").alias("nbr_sk"))
             )
-            sk = _ckpt(
+            sk = (
                 sk.join(nbr, "id", "left").select(
                     "id",
                     F.when(F.col("nbr_sk").isNull(), F.col("sk"))
                     .otherwise(F.hll_union("sk", "nbr_sk"))
                     .alias("sk"),
                 )
+                .localCheckpoint(eager=True)
             )
             tot = sk.agg(
                 F.sum(F.hll_sketch_estimate("sk")).alias("t")
@@ -298,7 +280,6 @@ def effective_diameter(
             if prev is not None and tot <= prev * 1.0001:
                 break
             prev = tot
-        e.unpersist()
         target = quantile * totals[-1]
         h_eff = next(i for i, t in enumerate(totals, start=1) if t >= target)
         return h_eff, totals
@@ -317,7 +298,7 @@ def diameter_lower_bound(
     bound that is exact on trees and tight in practice on web graphs. Two
     frontier floods; pairs well with the HLL `effective_diameter` upper-side
     estimate."""
-    verts = _vertices(edges)
+    verts = vertex_ids(edges)
     if start is None:
         row = verts.agg(F.min("id")).first()
         if row is None or row[0] is None:

@@ -1,18 +1,12 @@
 """Connected components (north rule G4; reference counts them via networkx at
 ``/root/reference/src/pyBiodatafuse/analyzer/summarize.py:67``).
 
-Two implementations, cross-checked by tests:
-
-- :func:`components` (default ``algorithm="two_phase"``): the small-star /
-  large-star alternation of Kiveris et al., "Connected Components in
-  MapReduce and Beyond" (SOCC'14) — O(log^2 n) supersteps, each superstep a
-  pair of groupBy-min + join rounds over the shrinking edge-pair state.
-  Convergence: the edge-pair multiset reaches a fixpoint, detected by a
-  deterministic state fingerprint (sum of per-pair xxhash64) staying equal on
-  two consecutive supersteps.
-- ``algorithm="hash_min"``: plain min-label flooding over per-vertex state
-  (O(diameter) supersteps, count-of-changed-labels convergence) — the simple
-  differential baseline.
+:func:`components` runs the small-star / large-star alternation of Kiveris
+et al., "Connected Components in MapReduce and Beyond" (SOCC'14) —
+O(log^2 n) supersteps, each superstep a pair of groupBy-min + join rounds
+over the shrinking edge-pair state. Convergence: the edge-pair multiset
+reaches a fixpoint, detected by a deterministic state fingerprint (sum of
+per-pair xxhash64) staying equal on two consecutive supersteps.
 
 Component id = min vertex id in the component (matches the union-find oracle).
 """
@@ -22,8 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.operators.edges import symmetrize
-from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate
+from pybiodatafuse_spark.operators.edges import vertex_ids
+from pybiodatafuse_spark.plans.superstep import iterate
 from pybiodatafuse_spark.storage import Storage
 
 
@@ -68,7 +62,6 @@ def components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
     *,
-    algorithm: str = "two_phase",
     max_iter: int = 50,
     storage: Storage | None = None,
     run_id: str | None = None,
@@ -76,35 +69,6 @@ def components(
 ) -> DataFrame:
     """Returns ``(id: long, component: long)`` for every vertex (isolated
     vertices map to themselves)."""
-    verts = (
-        vertices.select("id")
-        if vertices is not None
-        else edges.select(F.col("src").alias("id")).unionByName(
-            edges.select(F.col("dst").alias("id"))
-        )
-    ).dropDuplicates(["id"])
-
-    if algorithm == "two_phase":
-        labels = _two_phase(spark, edges, max_iter, storage, run_id, checkpoint_every)
-    elif algorithm == "hash_min":
-        labels = _hash_min(spark, edges, verts, max_iter, storage, run_id, checkpoint_every)
-    else:
-        raise ValueError(f"unknown components algorithm: {algorithm}")
-
-    return (
-        verts.join(labels, "id", "left")
-        .select("id", F.coalesce("component", "id").alias("component"))
-    )
-
-
-def _two_phase(
-    spark: SparkSession,
-    edges: DataFrame,
-    max_iter: int,
-    storage: Storage | None,
-    run_id: str | None,
-    checkpoint_every: int,
-) -> DataFrame:
     pairs0 = (
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -114,7 +78,7 @@ def _two_phase(
     def step(state: DataFrame, k: int, carry: dict):
         return _small_star(_large_star(state)), _fingerprint(), None
 
-    res = iterate(
+    pairs = iterate(
         spark,
         pairs0,
         step,
@@ -124,68 +88,16 @@ def _two_phase(
         checkpoint_every=checkpoint_every,
         storage=storage,
         run_id=run_id,
-    )
-    pairs = res.state
+    ).state
     # At fixpoint the pair set is a union of stars (v → component-min m).
     roots = pairs.select(F.col("v").alias("id")).dropDuplicates(["id"])
-    return (
+    labels = (
         pairs.select(F.col("u").alias("id"), F.col("v").alias("component"))
         .unionByName(roots.select("id", F.col("id").alias("component")))
         .groupBy("id")
         .agg(F.min("component").alias("component"))
     )
-
-
-def _hash_min(
-    spark: SparkSession,
-    edges: DataFrame,
-    verts: DataFrame,
-    max_iter: int,
-    storage: Storage | None,
-    run_id: str | None,
-    checkpoint_every: int,
-) -> DataFrame:
-    # loop-invariant adjacency: pre-partition on the join key so its cached
-    # partitioning satisfies the superstep join and only the O(V) label state
-    # shuffles per superstep (same reuse pattern as plans.pagerank._prepare)
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = symmetrize(edges).repartition(parts, "src").persist()
-    state0 = verts.select("id", F.col("id").alias("label"), F.lit(1).alias("changed"))
-
-    def step(state: DataFrame, k: int, carry: dict):
-        nbr_min = (
-            state.hint("shuffle_hash").join(sym, state["id"] == sym["src"])
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new = (
-            state.select("id", "label")
-            .join(nbr_min, "id", "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce("nbr_label", F.col("label"))).alias(
-                    "label"
-                ),
-                (
-                    F.least(F.col("label"), F.coalesce("nbr_label", F.col("label")))
-                    != F.col("label")
-                )
-                .cast("int")
-                .alias("changed"),
-            )
-        )
-        return new, F.sum("changed").cast("double"), None
-
-    res = iterate(
-        spark,
-        state0,
-        step,
-        algorithm="components_hash_min",
-        max_iter=max_iter,
-        tol=0.5,
-        checkpoint_every=checkpoint_every,
-        storage=storage,
-        run_id=run_id,
+    return (
+        vertex_ids(edges, vertices).join(labels, "id", "left")
+        .select("id", F.coalesce("component", "id").alias("component"))
     )
-    sym.unpersist()
-    return res.state.select("id", F.col("label").alias("component"))

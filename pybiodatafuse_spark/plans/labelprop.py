@@ -14,11 +14,11 @@ groupBys — (vertex, label) counts, then argmax via ``max(struct(cnt, -label))`
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.operators.edges import symmetrize
-from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate
+from pybiodatafuse_spark.operators.edges import symmetrize, vertex_ids
+from pybiodatafuse_spark.plans.superstep import iterate, pinned
 from pybiodatafuse_spark.storage import Storage
 
 
@@ -33,58 +33,47 @@ def label_propagation(
     checkpoint_every: int = 5,
 ) -> DataFrame:
     """Returns ``(id: long, label: long)``."""
-    verts = (
-        vertices.select("id")
-        if vertices is not None
-        else edges.select(F.col("src").alias("id")).unionByName(
-            edges.select(F.col("dst").alias("id"))
-        )
-    ).dropDuplicates(["id"])
-    # Hash-partition the loop-invariant adjacency on the join key with exactly
-    # spark.sql.shuffle.partitions partitions: its cached partitioning then
-    # satisfies the superstep join's distribution, so only the O(V) label
-    # state shuffles per superstep — never the O(E) edge table (same reuse
-    # pattern as plans.pagerank._prepare; measured dominant there).
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    sym = symmetrize(edges).repartition(parts, "src").persist()
-    state0 = verts.select("id", F.col("id").alias("label"), F.lit(1).alias("changed"))
-
-    def step(state: DataFrame, k: int, carry: dict):
-        # shuffle_hash: the O(V) state side builds the hash map; SMJ would
-        # re-sort the cached adjacency every superstep
-        nbr_labels = state.hint("shuffle_hash").join(
-            sym, state["id"] == sym["src"]
-        ).select(F.col("dst").alias("id"), "label")
-        winner = (
-            nbr_labels.groupBy("id", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .groupBy("id")
-            .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("best"))
-            .select("id", (-F.col("best.neg")).alias("new_label"))
-        )
-        new = (
-            state.select("id", "label")
-            .join(winner, "id", "left")
-            .select(
-                "id",
-                F.coalesce("new_label", "label").alias("label"),
-                (F.coalesce("new_label", "label") != F.col("label"))
-                .cast("int")
-                .alias("changed"),
-            )
-        )
-        return new, F.sum("changed").cast("double"), None
-
-    res = iterate(
-        spark,
-        state0,
-        step,
-        algorithm="label_propagation",
-        max_iter=max_iter,
-        tol=0.5,
-        checkpoint_every=checkpoint_every,
-        storage=storage,
-        run_id=run_id,
+    state0 = vertex_ids(edges, vertices).select(
+        "id", F.col("id").alias("label"), F.lit(1).alias("changed")
     )
-    sym.unpersist()
+    # pinned adjacency: only the O(V) label state shuffles per superstep
+    with pinned(symmetrize(edges), "src") as sym:
+
+        def step(state: DataFrame, k: int, carry: dict):
+            # shuffle_hash: the O(V) state side builds the hash map; SMJ would
+            # re-sort the cached adjacency every superstep
+            nbr_labels = state.hint("shuffle_hash").join(
+                sym, state["id"] == sym["src"]
+            ).select(F.col("dst").alias("id"), "label")
+            winner = (
+                nbr_labels.groupBy("id", "label")
+                .agg(F.count(F.lit(1)).alias("cnt"))
+                .groupBy("id")
+                .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("best"))
+                .select("id", (-F.col("best.neg")).alias("new_label"))
+            )
+            new = (
+                state.select("id", "label")
+                .join(winner, "id", "left")
+                .select(
+                    "id",
+                    F.coalesce("new_label", "label").alias("label"),
+                    (F.coalesce("new_label", "label") != F.col("label"))
+                    .cast("int")
+                    .alias("changed"),
+                )
+            )
+            return new, F.sum("changed").cast("double"), None
+
+        res = iterate(
+            spark,
+            state0,
+            step,
+            algorithm="label_propagation",
+            max_iter=max_iter,
+            tol=0.5,
+            checkpoint_every=checkpoint_every,
+            storage=storage,
+            run_id=run_id,
+        )
     return res.state.select("id", "label")

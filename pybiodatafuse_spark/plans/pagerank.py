@@ -10,8 +10,9 @@ dangling mass redistributed uniformly, convergence when
 
 Scale design:
 - **Loop-invariant edge prep**: ``edges_norm(src, dst, frac, salt)`` —
-  contribution fraction precomputed once, hash-partitioned on the join key and
-  persisted, so each superstep's join reuses the same partitioning.
+  contribution fraction precomputed once and pinned on the join keys
+  (``plans.superstep.pinned``), so each superstep's join reuses the same
+  partitioning.
 - **Skew (hub) handling**: sources with out-degree ≥ ``hub_threshold`` get
   per-edge salt buckets; only hub rank rows are replicated across salts
   (``explode``), so a hub's adjacency fans out over ``num_salts`` shuffle
@@ -28,13 +29,14 @@ above; ``plans.csr.pagerank_csr`` supplies the CSR block kernel.
 
 from __future__ import annotations
 
+import contextlib
 from typing import Callable
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate
+from pybiodatafuse_spark.operators.edges import vertex_ids
+from pybiodatafuse_spark.plans.superstep import SuperstepResult, iterate, pinned
 from pybiodatafuse_spark.storage import Storage
 
 
@@ -48,29 +50,22 @@ def _graph(edges: DataFrame, vertices: DataFrame | None):
     fracs = edges.join(out_w, "src").select(
         "src", "dst", (F.col("weight") / F.col("out_w")).alias("frac")
     )
-    if vertices is not None:
-        verts = vertices.select("id").dropDuplicates(["id"])
-    else:
-        verts = (
-            edges.select(F.col("src").alias("id"))
-            .unionByName(edges.select(F.col("dst").alias("id")))
-            .dropDuplicates(["id"])
-        )
-    init = verts.join(
+    init = vertex_ids(edges, vertices).join(
         out_w.select(F.col("src").alias("id"), "out_deg"), "id", "left"
     ).select("id", F.col("out_deg").isNull().alias("is_dangling"))
     return out_w, fracs, init
 
 
+@contextlib.contextmanager
 def _prepare(
     edges: DataFrame,
     vertices: DataFrame | None,
     num_salts: int,
     hub_threshold: int,
-    shuffle_partitions: int | None,
 ):
-    """Join-path prep: ``(edges_norm, init, salted)`` with ``edges_norm``
-    hash-partitioned and persisted and ``init(id, is_dangling, is_hub)``."""
+    """Join-path prep, yielding ``(edges_norm, init, salted)`` with
+    ``edges_norm`` pinned on the hop-join keys for the duration of the block
+    and ``init(id, is_dangling, is_hub)``."""
     out_w, fracs, init = _graph(edges, vertices)
     hubs = out_w.where(F.col("out_deg") >= hub_threshold).select(
         F.col("src").alias("id"), F.lit(True).alias("is_hub")
@@ -101,24 +96,16 @@ def _prepare(
             .cast("int")
             .alias("salt"),
         )
-    if shuffle_partitions is None:
-        shuffle_partitions = int(
-            edges.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    # ALWAYS hash-partition the loop-invariant side on the join keys with
-    # exactly spark.sql.shuffle.partitions partitions: the persisted exchange
-    # output then *satisfies* the join's ClusteredDistribution, so
-    # EnsureRequirements adds NO exchange for the edge side and each superstep
-    # shuffles only the O(V) rank rows — without this the O(E) edge table
-    # re-shuffles every superstep (measured: the dominant superstep cost at
-    # 27M edges, and the reason 4→16-core scaling collapsed to ~1.6×).
-    keys = ["src", "salt"] if salted else ["src"]
-    edges_norm = edges_norm.repartition(shuffle_partitions, *keys)
-    edges_norm = edges_norm.persist(StorageLevel.MEMORY_AND_DISK)
     init = init.join(F.broadcast(hubs), "id", "left").select(
         "id", "is_dangling", F.coalesce(F.col("is_hub"), F.lit(False)).alias("is_hub")
     )
-    return edges_norm, init, salted
+    # ALWAYS pin the loop-invariant side on the join keys: without it the
+    # O(E) edge table re-shuffles every superstep (measured: the dominant
+    # superstep cost at 27M edges, and the reason 4→16-core scaling collapsed
+    # to ~1.6×).
+    keys = ["src", "salt"] if salted else ["src"]
+    with pinned(edges_norm, *keys) as edges_norm:
+        yield edges_norm, init, salted
 
 
 def _program(
@@ -252,7 +239,6 @@ def pagerank(
     storage: Storage | None = None,
     run_id: str | None = None,
     checkpoint_every: int = 5,
-    shuffle_partitions: int | None = None,
     reset: DataFrame | None = None,
     init_ranks: DataFrame | None = None,
 ) -> SuperstepResult:
@@ -277,58 +263,57 @@ def pagerank(
     supersteps instead of O(50) (the incremental path a daily 10^12-page
     snapshot needs). A resumed run ignores it (checkpoint state wins).
     """
-    edges_norm, init, salted = _prepare(
-        edges, vertices, num_salts, hub_threshold, shuffle_partitions
-    )
-    salts = F.sequence(F.lit(0), F.lit(num_salts - 1)).cast("array<int>")
+    with _prepare(edges, vertices, num_salts, hub_threshold) as (
+        edges_norm, init, salted
+    ):
+        salts = F.sequence(F.lit(0), F.lit(num_salts - 1)).cast("array<int>")
 
-    def contrib(state: DataFrame) -> DataFrame:
-        # shuffle_hash hints: the rank side is the small build side — SHJ
-        # avoids re-sorting the (loop-invariant, persisted) edge table every
-        # superstep, and keeps the contribs join off the single-threaded
-        # broadcast-build path (both measured wins; see BENCH/BASELINE.md).
-        if salted:
-            ranks = state.select(
-                "id",
-                "rank",
-                F.explode(
-                    F.when(
-                        F.col("is_hub"), salts
-                    ).otherwise(F.array(F.lit(0).cast("int")))
-                ).alias("salt"),
-            ).hint("shuffle_hash")
-            cond = (ranks["id"] == edges_norm["src"]) & (
-                ranks["salt"] == edges_norm["salt"]
+        def contrib(state: DataFrame) -> DataFrame:
+            # shuffle_hash hints: the rank side is the small build side — SHJ
+            # avoids re-sorting the (loop-invariant, persisted) edge table every
+            # superstep, and keeps the contribs join off the single-threaded
+            # broadcast-build path (both measured wins; see BENCH/BASELINE.md).
+            if salted:
+                ranks = state.select(
+                    "id",
+                    "rank",
+                    F.explode(
+                        F.when(
+                            F.col("is_hub"), salts
+                        ).otherwise(F.array(F.lit(0).cast("int")))
+                    ).alias("salt"),
+                ).hint("shuffle_hash")
+                cond = (ranks["id"] == edges_norm["src"]) & (
+                    ranks["salt"] == edges_norm["salt"]
+                )
+            else:
+                # hub-free: no salt column anywhere, so the rank side's
+                # hashpartitioning(id) from the previous superstep's join
+                # satisfies the hop-join distribution — zero rank-side exchange
+                ranks = state.select("id", "rank").hint("shuffle_hash")
+                cond = ranks["id"] == edges_norm["src"]
+            return (
+                ranks.join(edges_norm, cond)
+                .groupBy("dst")
+                .agg(F.sum(F.col("rank") * F.col("frac")).alias("contrib"))
+                .withColumnRenamed("dst", "id")
             )
-        else:
-            # hub-free: no salt column anywhere, so the rank side's
-            # hashpartitioning(id) from the previous superstep's join
-            # satisfies the hop-join distribution — zero rank-side exchange
-            ranks = state.select("id", "rank").hint("shuffle_hash")
-            cond = ranks["id"] == edges_norm["src"]
-        return (
-            ranks.join(edges_norm, cond)
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("frac")).alias("contrib"))
-            .withColumnRenamed("dst", "id")
+
+        state0, step = _program(
+            init, contrib, damping=damping, reset=reset, init_ranks=init_ranks
+        )
+        return iterate(
+            spark,
+            state0,
+            step,
+            algorithm="pagerank",
+            max_iter=max_iter,
+            tol=tol,
+            checkpoint_every=checkpoint_every,
+            storage=storage,
+            run_id=run_id,
         )
 
-    state0, step = _program(
-        init, contrib, damping=damping, reset=reset, init_ranks=init_ranks
-    )
-    result = iterate(
-        spark,
-        state0,
-        step,
-        algorithm="pagerank",
-        max_iter=max_iter,
-        tol=tol,
-        checkpoint_every=checkpoint_every,
-        storage=storage,
-        run_id=run_id,
-    )
-    edges_norm.unpersist()
-    return result
 
 def top_ranks(result: SuperstepResult, k: int = 20) -> DataFrame:
     """Top-k vertices by rank, deterministic tie-break on id (TakeOrdered —

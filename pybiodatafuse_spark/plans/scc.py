@@ -22,10 +22,9 @@ outer rounds, each over the still-active subgraph:
    color boundary. Settled vertices get ``scc = f(v)`` and leave the game.
 
 Every inner loop shuffles only the O(active) label/frontier state: the
-active edge list is re-partitioned on the join key once per outer round and
-persisted, so per-superstep joins reuse the cached exchange (same
-loop-invariant pattern as plans.pagerank._prepare). State lineage is cut by
-``localCheckpoint`` each superstep.
+active edge list is pinned on each join key once per outer round
+(``plans.superstep.pinned``), so per-superstep joins reuse the cached
+exchange. State lineage is cut by ``localCheckpoint`` each superstep.
 
 Outer-round count is bounded by the number of "hidden" SCC layers — small
 for real web graphs (the giant SCC + trim absorbs almost everything in
@@ -34,27 +33,13 @@ round 1).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
+import contextlib
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pybiodatafuse_spark.plans.superstep import no_aqe
-
-
-def _parts(spark: SparkSession) -> int:
-    return int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=True)
-
-
-def _pin(df: DataFrame, key: str) -> DataFrame:
-    out = df.repartition(_parts(df.sparkSession), key).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    out.count()
-    return out
+from pybiodatafuse_spark.operators.edges import vertex_ids
+from pybiodatafuse_spark.plans.superstep import no_aqe, pinned
 
 
 def strongly_connected_components(
@@ -76,32 +61,25 @@ def strongly_connected_components(
     flooding needs O(diameter) supersteps, so a long directed chain/cycle
     legitimately needs more than any small fixed cap (a 150-vertex cycle is
     one SCC, not 150 singletons)."""
-    verts = (
-        vertices.select("id")
-        if vertices is not None
-        else edges.select(F.col("src").alias("id")).unionByName(
-            edges.select(F.col("dst").alias("id"))
-        )
-    ).dropDuplicates(["id"])
-
     with no_aqe(spark):
-        return _scc_body(spark, edges, verts, max_outer, max_inner)
+        return _scc_body(spark, edges, vertex_ids(edges, vertices), max_outer, max_inner)
 
 
 def _scc_body(spark, edges, verts, max_outer, max_inner):
-    active_v = _ckpt(verts.select("id"))
-    active_e = _ckpt(
+    active_v = verts.select("id").localCheckpoint(eager=True)
+    active_e = (
         edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
+        .localCheckpoint(eager=True)
     )
     assigned: DataFrame | None = None  # (id, scc)
 
     def assign(df: DataFrame) -> None:
         nonlocal assigned
-        assigned = _ckpt(
+        assigned = (
             df if assigned is None else assigned.unionByName(df)
-        )
+        ).localCheckpoint(eager=True)
 
     n_active = active_v.count()
     for _outer in range(max_outer):
@@ -120,7 +98,7 @@ def _scc_body(spark, edges, verts, max_outer, max_inner):
                 raise RuntimeError(
                     f"SCC trim did not reach fixpoint in {max_inner} peels"
                 )
-            keep = _ckpt(
+            keep = (
                 active_e.select(
                     F.col("src").alias("id"), F.lit(1).alias("o"), F.lit(0).alias("i")
                 )
@@ -134,6 +112,7 @@ def _scc_body(spark, edges, verts, max_outer, max_inner):
                 .agg(F.max("o").alias("o"), F.max("i").alias("i"))
                 .where((F.col("o") == 1) & (F.col("i") == 1))
                 .select("id")
+                .localCheckpoint(eager=True)
             )
             n_keep = keep.count()
             if n_keep == n_active:
@@ -142,93 +121,101 @@ def _scc_body(spark, edges, verts, max_outer, max_inner):
             n_active = n_keep
             if n_active == 0:
                 break
-            active_e = _ckpt(
+            active_e = (
                 active_e.join(
                     keep.select(F.col("id").alias("src")), "src", "left_semi"
                 ).join(keep.select(F.col("id").alias("dst")), "dst", "left_semi")
+                .localCheckpoint(eager=True)
             )
         if n_active == 0:
             break
 
-        # loop-invariant adjacency for this outer round: one copy partitioned
-        # per inner-join key so neither inner loop re-exchanges the edge list
+        # loop-invariant adjacency for this outer round: one copy pinned per
+        # inner-join key so neither inner loop re-exchanges the edge list
         # (forward coloring joins on src; backward settle joins on dst)
-        e_by_src = _pin(active_e, "src")
-        e_by_dst = _pin(active_e, "dst")
+        with contextlib.ExitStack() as pins:
+            e_by_src = pins.enter_context(pinned(active_e, "src"))
+            e_by_dst = pins.enter_context(pinned(active_e, "dst"))
 
-        # ---- 2. forward coloring: f(v) = min id reaching v ----------------
-        # min-label flooding to FIXPOINT (monotone on a finite lattice →
-        # converges in ≤ diameter supersteps); cap raises, never truncates.
-        f = _ckpt(active_v.select("id", F.col("id").alias("f")))
-        for _fwd_it in range(max_inner + 1):
-            if _fwd_it == max_inner:
-                raise RuntimeError(
-                    f"SCC forward coloring did not converge in {max_inner} "
-                    f"supersteps (changed={changed})"
+            # ---- 2. forward coloring: f(v) = min id reaching v ------------
+            # min-label flooding to FIXPOINT (monotone on a finite lattice →
+            # converges in ≤ diameter supersteps); cap raises, never truncates.
+            f = active_v.select("id", F.col("id").alias("f")).localCheckpoint(eager=True)
+            for _fwd_it in range(max_inner + 1):
+                if _fwd_it == max_inner:
+                    raise RuntimeError(
+                        f"SCC forward coloring did not converge in {max_inner} "
+                        f"supersteps (changed={changed})"
+                    )
+                nbr_min = (
+                    f.hint("shuffle_hash")
+                    .join(e_by_src, f["id"] == e_by_src["src"])
+                    .groupBy(F.col("dst").alias("id"))
+                    .agg(F.min("f").alias("in_f"))
                 )
-            nbr_min = (
-                f.hint("shuffle_hash")
-                .join(e_by_src, f["id"] == e_by_src["src"])
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("f").alias("in_f"))
-            )
-            new_f = _ckpt(
-                f.join(nbr_min, "id", "left").select(
-                    "id",
-                    F.least(F.col("f"), F.coalesce("in_f", F.col("f"))).alias("f"),
-                    (F.coalesce("in_f", F.col("f")) < F.col("f"))
-                    .cast("long")
-                    .alias("chg"),
+                new_f = (
+                    f.join(nbr_min, "id", "left").select(
+                        "id",
+                        F.least(F.col("f"), F.coalesce("in_f", F.col("f"))).alias("f"),
+                        (F.coalesce("in_f", F.col("f")) < F.col("f"))
+                        .cast("long")
+                        .alias("chg"),
+                    )
+                    .localCheckpoint(eager=True)
                 )
-            )
-            changed = new_f.agg(F.sum("chg")).first()[0] or 0
-            f = new_f.select("id", "f")
-            if changed == 0:
-                break
+                changed = new_f.agg(F.sum("chg")).first()[0] or 0
+                f = new_f.select("id", "f")
+                if changed == 0:
+                    break
 
-        # ---- 3. backward settle within color ------------------------------
-        # settled(v): v reaches its root f(v) through same-colored vertices.
-        # Flood backwards: an edge (v → u) with settled(u) and f(u) = f(v)
-        # settles v. Frontier-driven: only newly settled ids join per step.
-        f = _pin(f, "id")
-        settled = _ckpt(f.where(F.col("id") == F.col("f")).select("id", "f"))
-        frontier = settled
-        # backward settle to FIXPOINT (frontier strictly shrinks the
-        # unsettled set → terminates); cap raises, never truncates.
-        for _bwd_it in range(max_inner + 1):
-            if _bwd_it == max_inner:
-                raise RuntimeError(
-                    f"SCC backward settle did not converge in {max_inner} "
-                    f"supersteps (frontier still non-empty)"
-                )
-            preds = (
-                frontier.hint("shuffle_hash")
-                .join(e_by_dst, frontier["id"] == e_by_dst["dst"])
-                .select(F.col("src").alias("id"), F.col("f").alias("root"))
-                .dropDuplicates(["id", "root"])
-            )
-            newly = _ckpt(
-                preds.join(f, "id")
-                .where(F.col("root") == F.col("f"))
+            # ---- 3. backward settle within color --------------------------
+            # settled(v): v reaches its root f(v) through same-colored vertices.
+            # Flood backwards: an edge (v → u) with settled(u) and f(u) = f(v)
+            # settles v. Frontier-driven: only newly settled ids join per step.
+            f = pins.enter_context(pinned(f, "id"))
+            settled = (
+                f.where(F.col("id") == F.col("f"))
                 .select("id", "f")
-                .join(settled.select("id"), "id", "left_anti")
-                .dropDuplicates(["id"])
+                .localCheckpoint(eager=True)
             )
-            if newly.isEmpty():
-                break
-            settled = _ckpt(settled.unionByName(newly))
-            frontier = newly
-        e_by_src.unpersist()
-        e_by_dst.unpersist()
-        f.unpersist()
+            frontier = settled
+            # backward settle to FIXPOINT (frontier strictly shrinks the
+            # unsettled set → terminates); cap raises, never truncates.
+            for _bwd_it in range(max_inner + 1):
+                if _bwd_it == max_inner:
+                    raise RuntimeError(
+                        f"SCC backward settle did not converge in {max_inner} "
+                        f"supersteps (frontier still non-empty)"
+                    )
+                preds = (
+                    frontier.hint("shuffle_hash")
+                    .join(e_by_dst, frontier["id"] == e_by_dst["dst"])
+                    .select(F.col("src").alias("id"), F.col("f").alias("root"))
+                    .dropDuplicates(["id", "root"])
+                )
+                newly = (
+                    preds.join(f, "id")
+                    .where(F.col("root") == F.col("f"))
+                    .select("id", "f")
+                    .join(settled.select("id"), "id", "left_anti")
+                    .dropDuplicates(["id"])
+                    .localCheckpoint(eager=True)
+                )
+                if newly.isEmpty():
+                    break
+                settled = settled.unionByName(newly).localCheckpoint(eager=True)
+                frontier = newly
 
         assign(settled.select("id", F.col("f").alias("scc")))
-        active_v = _ckpt(active_v.join(settled.select("id"), "id", "left_anti"))
+        active_v = (
+            active_v.join(settled.select("id"), "id", "left_anti").localCheckpoint(eager=True)
+        )
         n_active = active_v.count()
-        active_e = _ckpt(
+        active_e = (
             active_e.join(
                 active_v.select(F.col("id").alias("src")), "src", "left_semi"
             ).join(active_v.select(F.col("id").alias("dst")), "dst", "left_semi")
+            .localCheckpoint(eager=True)
         )
     if n_active != 0:  # max_outer hit with leftovers
         raise RuntimeError(f"SCC did not converge in {max_outer} outer rounds")
@@ -272,7 +259,9 @@ def bowtie_decomposition(
     if core_id is None:
         return scc.select("id", F.lit("OTHER").alias("cls")).limit(0)
     core_scc = core_id["scc"]
-    core = _ckpt(scc.where(F.col("scc") == F.lit(core_scc)).select("id"))
+    core = scc.where(F.col("scc") == F.lit(core_scc)).select("id").localCheckpoint(
+        eager=True
+    )
 
     e = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     out_set = _flood(spark, e, core, max_inner)  # forward: reachable from core
@@ -304,29 +293,28 @@ def _flood(spark, edges, seeds, max_inner):
     an IN/OUT label. Frontier-driven BFS to fixpoint; the edge list is
     pinned on the join key once; ``max_inner`` is a safety cap that raises
     rather than silently truncating reachability."""
-    e = _pin(edges.dropDuplicates(["src", "dst"]), "src")
-    reached = _ckpt(seeds.select("id"))
-    frontier = reached
-    out: DataFrame | None = None
-    for _fl_it in range(max_inner + 1):
-        if _fl_it == max_inner:
-            raise RuntimeError(
-                f"reachability flood did not converge in {max_inner} hops"
+    with pinned(edges.dropDuplicates(["src", "dst"]), "src") as e:
+        reached = seeds.select("id").localCheckpoint(eager=True)
+        frontier = reached
+        out: DataFrame | None = None
+        for _fl_it in range(max_inner + 1):
+            if _fl_it == max_inner:
+                raise RuntimeError(
+                    f"reachability flood did not converge in {max_inner} hops"
+                )
+            nxt = (
+                frontier.hint("shuffle_hash")
+                .join(e, frontier["id"] == e["src"])
+                .select(F.col("dst").alias("id"))
+                .dropDuplicates(["id"])
+                .join(reached, "id", "left_anti")
+                .localCheckpoint(eager=True)
             )
-        nxt = (
-            frontier.hint("shuffle_hash")
-            .join(e, frontier["id"] == e["src"])
-            .select(F.col("dst").alias("id"))
-            .dropDuplicates(["id"])
-            .join(reached, "id", "left_anti")
-        )
-        nxt = _ckpt(nxt)
-        if nxt.isEmpty():
-            break
-        out = _ckpt(nxt if out is None else out.unionByName(nxt))
-        reached = _ckpt(reached.unionByName(nxt))
-        frontier = nxt
-    e.unpersist()
+            if nxt.isEmpty():
+                break
+            out = (nxt if out is None else out.unionByName(nxt)).localCheckpoint(eager=True)
+            reached = reached.unionByName(nxt).localCheckpoint(eager=True)
+            frontier = nxt
     if out is None:
         return reached.limit(0)
     return out.join(seeds.select("id"), "id", "left_anti")

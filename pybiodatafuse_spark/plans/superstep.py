@@ -103,6 +103,32 @@ def no_aqe(spark: SparkSession):
         spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
+@contextlib.contextmanager
+def pinned(df: DataFrame, *keys: str):
+    """Pin a loop-invariant relation for the duration of an iterative loop:
+    hash-partition it on the join ``keys`` with exactly
+    ``spark.sql.shuffle.partitions`` partitions and persist it
+    (``MEMORY_AND_DISK``). The cached exchange output then *satisfies* every
+    superstep join's ClusteredDistribution on ``keys``, so EnsureRequirements
+    adds no exchange on the pinned side and each superstep shuffles only the
+    O(state) side (DESIGN.md §6b).
+
+    Persisting is lazy: the first superstep action materializes the cache,
+    with no extra Spark job. The cached plan is built at ``persist`` time,
+    so it is built with AQE off: an adaptive cached plan reports an unknown
+    partitioning until it has run, and superstep 1 (planned before that)
+    would re-exchange the pinned side. The copy is unpersisted on exit,
+    including when the loop raises."""
+    spark = df.sparkSession
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with no_aqe(spark):
+        out = df.repartition(parts, *keys).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield out
+    finally:
+        out.unpersist()
+
+
 def _free(df: DataFrame) -> None:
     """Release a superseded state snapshot. DataFrame.unpersist() does not
     drop localCheckpoint blocks (they belong to the internal RDD), which

@@ -19,6 +19,9 @@ from pyspark.sql import functions as F
 
 from pybiodatafuse_spark.operators.edges import symmetrize
 
+# oriented-edge count up to which the closing join broadcasts the edge list
+BROADCAST_THRESHOLD = 5_000_000
+
 
 def _oriented(edges: DataFrame) -> DataFrame:
     """Oriented edge list (u, v) with (deg, id)-order u ≺ v, carrying the
@@ -39,12 +42,7 @@ def _oriented(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangles(
-    spark: SparkSession,
-    edges: DataFrame,
-    *,
-    broadcast_threshold: int = 5_000_000,
-) -> tuple[int, DataFrame]:
+def triangles(spark: SparkSession, edges: DataFrame) -> tuple[int, DataFrame]:
     """Returns ``(total, per_vertex)`` where per_vertex = (id, triangles)
     for every vertex participating in ≥1 triangle."""
     e = _oriented(edges).persist()
@@ -57,7 +55,7 @@ def triangles(
         | ((F.col("dv1") == F.col("dv2")) & (F.col("v1") < F.col("v2")))
     )
     closing = e.select(F.col("u").alias("v1"), F.col("v").alias("v2"))
-    if n_edges <= broadcast_threshold:
+    if n_edges <= BROADCAST_THRESHOLD:
         closing = F.broadcast(closing)
     tris = wedges.join(closing, ["v1", "v2"]).select("u", "v1", "v2")
     tris = tris.persist()

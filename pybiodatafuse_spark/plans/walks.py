@@ -4,12 +4,9 @@ networkx loop with per-process RNG; neither distributed nor reproducible).
 
 Spark-first restatement:
 - adjacency prepared ONCE per run: per-src neighbor array sorted by dst with
-  aligned weight/etype arrays, hash-partitioned on ``src`` with exactly
-  ``spark.sql.shuffle.partitions`` partitions and persisted — the cached
-  exchange output then *satisfies* each hop-join's ClusteredDistribution, so
-  the per-hop joins shuffle ONLY the O(active walks) frontier and never
-  re-exchange the O(V) adjacency (the same loop-invariant pattern as
-  plans/pagerank._prepare; gate: tests/test_plans_quality.py::
+  aligned weight/etype arrays, pinned on ``src`` (``plans.superstep.pinned``),
+  so the per-hop joins shuffle ONLY the O(active walks) frontier and never
+  re-exchange the O(V) adjacency (gate: tests/test_plans_quality.py::
   test_walk_adjacency_side_never_reshuffles);
 - each superstep advances EVERY walk one hop via a frontier ⋈ adjacency join;
 - randomness is hash-based — ``u = hash64(f"{walk_id}#{step}") / 2^60`` — so
@@ -30,29 +27,15 @@ weight (``:234-263``).
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, SparkSession
+import contextlib
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pybiodatafuse_spark.functions.text import hash64
-from pybiodatafuse_spark.plans.superstep import no_aqe
+from pybiodatafuse_spark.plans.superstep import no_aqe, pinned
 
 _HASH_SPACE = float(1 << 60)
-
-
-def _shuffle_parts(df: DataFrame) -> int:
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-
-
-def _pin(df: DataFrame) -> DataFrame:
-    """Hash-partition a loop-invariant relation on ``src`` with the session
-    shuffle-partition count and persist: every subsequent equi-join on
-    ``src`` reuses the cached partitioning with NO per-hop Exchange."""
-    out = df.repartition(_shuffle_parts(df), "src").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    out.count()
-    return out
 
 
 def _adjacency_with_cdf(edges: DataFrame) -> DataFrame:
@@ -89,8 +72,7 @@ def random_walks(
     walk_id = start_id * num_walks + w (deterministic); u for step k of a
     walk depends only on (walk_id, k).
     """
-    adj = _pin(_adjacency_with_cdf(edges))
-    with no_aqe(spark):
+    with pinned(_adjacency_with_cdf(edges), "src") as adj, no_aqe(spark):
         return _random_walks_loop(
             spark, adj, start_vertices, num_walks=num_walks, walk_length=walk_length
         )
@@ -146,7 +128,6 @@ def _random_walks_loop(spark, adj, start_vertices, *, num_walks, walk_length):
             moved.unionByName(frontier.where(F.col("done")))
             .localCheckpoint(eager=True)
         )
-    adj.unpersist()
     return frontier.select("walk_id", "start", "path")
 
 
@@ -244,9 +225,12 @@ def biased_random_walks(
             "src", F.col("dsts").alias("sdsts"), F.col("cdf").alias("scdf")
         )
         adj = adj.join(sim_adj, "src", "left")
-    adj = _pin(adj)
-    nbr_sets = _pin(_neighbor_sets(edges)) if use_pq else None
-    with no_aqe(spark):
+    with (
+        pinned(adj, "src") as adj,
+        (pinned(_neighbor_sets(edges), "src") if use_pq else contextlib.nullcontext())
+        as nbr_sets,
+        no_aqe(spark),
+    ):
         frontier = (
             start_vertices.select(F.col("id").alias("start"))
             .crossJoin(spark.range(num_walks).select(F.col("id").alias("w")))
@@ -398,7 +382,4 @@ def biased_random_walks(
             frontier = (
                 moved.unionByName(frontier.where(F.col("done"))).localCheckpoint(eager=True)
             )
-        adj.unpersist()
-        if nbr_sets is not None:
-            nbr_sets.unpersist()
         return frontier.select("walk_id", "start", "path")

@@ -1,5 +1,7 @@
-"""Connected components: both algorithms exact vs union-find oracle, on the
-pages fixture and on adversarial random graphs (paths, stars, forests)."""
+"""Connected components: the two-phase (small-star / large-star) algorithm
+exact vs union-find oracle, on the pages fixture and on adversarial random
+graphs (paths, stars, forests). The ``algorithm`` parameter only names the
+algorithm in the test ids."""
 
 from __future__ import annotations
 
@@ -13,12 +15,12 @@ from tests.oracles import components_oracle
 N = 400
 
 
-@pytest.mark.parametrize("algorithm", ["two_phase", "hash_min"])
+@pytest.mark.parametrize("algorithm", ["two_phase"])
 def test_components_match_oracle_on_pages(spark, graph400, algorithm):
     verts, edges, page_to_id = graph400
     got = {
         r["id"]: r["component"]
-        for r in components(spark, edges, verts, algorithm=algorithm).collect()
+        for r in components(spark, edges, verts).collect()
     }
     want = components_oracle(
         [(s, d) for s, d, _ in oracle_edges(N, page_to_id)], set(page_to_id.values())
@@ -27,7 +29,7 @@ def test_components_match_oracle_on_pages(spark, graph400, algorithm):
     assert len(set(got.values())) >= 2  # fixture guarantees ≥2 components
 
 
-@pytest.mark.parametrize("algorithm", ["two_phase", "hash_min"])
+@pytest.mark.parametrize("algorithm", ["two_phase"])
 @pytest.mark.parametrize("case", ["path", "random_forest", "star", "isolated"])
 def test_components_adversarial(spark, algorithm, case):
     rng = np.random.default_rng(7)
@@ -52,7 +54,7 @@ def test_components_adversarial(spark, algorithm, case):
     verts = spark.createDataFrame([(int(v),) for v in vs], "id long")
     got = {
         r["id"]: r["component"]
-        for r in components(spark, edges, verts, algorithm=algorithm, max_iter=60).collect()
+        for r in components(spark, edges, verts, max_iter=60).collect()
     }
     want = components_oracle(es, set(vs))
     assert got == want

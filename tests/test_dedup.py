@@ -72,6 +72,11 @@ def test_minhash_lsh_finds_planted_neardups(spark, docs):
     assert (0, 4) not in pairs and (2, 4) not in pairs  # unrelated docs don't
 
 
+def test_minhash_lsh_rejects_uneven_bands(spark, docs):
+    with pytest.raises(ValueError, match=r"k=7 .*bands=4"):
+        minhash_lsh_pairs(docs, k=7, bands=4)
+
+
 def test_simhash_deterministic_and_separates(spark, docs):
     a = {r["doc_id"]: r["simhash"] for r in simhash_docs(docs).collect()}
     b = {r["doc_id"]: r["simhash"] for r in simhash_docs(docs).collect()}

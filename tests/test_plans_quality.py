@@ -6,8 +6,15 @@ performance bugs at 100 TB even when outputs stay correct.
 
 from __future__ import annotations
 
+import contextlib
+import importlib
+import re
+
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
+
+from pybiodatafuse_spark.plans.superstep import no_aqe, pinned
 
 
 @pytest.fixture(scope="module")
@@ -56,13 +63,12 @@ def test_superstep_join_is_not_broadcast_or_sortmerge(spark):
         [(i, (i + 1) % 50, 1.0, 1) for i in range(50)],
         "src long, dst long, weight double, etype int",
     )
-    edges_norm, init, salted = _prepare(edges, None, 4, 1000, None)
-    assert not salted  # hub-free graph → adaptive unsalted plan
-    ranks = init.select("id", F.lit(0.02).alias("rank")).hint("shuffle_hash")
-    joined = ranks.join(edges_norm, ranks["id"] == edges_norm["src"])
-    plan = _plan(joined)
+    with _prepare(edges, None, 4, 1000) as (edges_norm, init, salted):
+        assert not salted  # hub-free graph → adaptive unsalted plan
+        ranks = init.select("id", F.lit(0.02).alias("rank")).hint("shuffle_hash")
+        joined = ranks.join(edges_norm, ranks["id"] == edges_norm["src"])
+        plan = _plan(joined)
     assert "ShuffledHashJoin" in plan
-    edges_norm.unpersist()
 
 
 def test_superstep_edge_side_never_reshuffles(spark):
@@ -77,24 +83,16 @@ def test_superstep_edge_side_never_reshuffles(spark):
         [(i, (i + 3) % 60, 1.0, 1) for i in range(60)],
         "src long, dst long, weight double, etype int",
     )
-    edges_norm, init, salted = _prepare(edges, None, 4, 1000, None)
-    assert not salted  # hub-free graph → unsalted join on src alone
-    ranks = init.select("id", F.lit(0.02).alias("rank")).hint("shuffle_hash")
-    joined = ranks.join(edges_norm, ranks["id"] == edges_norm["src"])
-    joined.count()  # execute so AQE finalizes the plan
-    plan = _plan(joined)
-    assert "InMemoryTableScan" in plan and "ShuffledHashJoin" in plan, plan
-    # the join's edge child (the right branch, ending at the cache scan) must
-    # contain NO Exchange: its cached partitioning satisfies the join
-    lines = plan.splitlines()
-    scan_i = next(i for i, l in enumerate(lines) if "InMemoryTableScan" in l)
-    start_i = next(
-        i for i in range(scan_i, -1, -1) if lines[i].lstrip().startswith("+- ")
-        and len(lines[i]) - len(lines[i].lstrip()) <= 3
-    )
-    edge_branch = "\n".join(lines[start_i:scan_i])
-    assert "Exchange" not in edge_branch, plan
-    edges_norm.unpersist()
+    with _prepare(edges, None, 4, 1000) as (edges_norm, init, salted):
+        assert not salted  # hub-free graph → unsalted join on src alone
+        ranks = init.select("id", F.lit(0.02).alias("rank")).hint("shuffle_hash")
+        joined = ranks.join(edges_norm, ranks["id"] == edges_norm["src"])
+        joined.count()  # execute so AQE finalizes the plan
+        plan = _plan(joined)
+    assert "ShuffledHashJoin" in plan, plan
+    # the join's edge child (ending at the cache scan) must contain NO
+    # Exchange: its cached partitioning satisfies the join
+    _no_exchange_above_cache_scan(plan)
 
 
 def test_whole_stage_codegen_in_agg(spark, pages_path):
@@ -156,83 +154,169 @@ def test_metrics_prefix_scan_has_no_single_partition_window(spark):
 
 
 def test_walk_adjacency_side_never_reshuffles(spark):
-    """The walk adjacency is loop-invariant: _pin hash-partitions it on src
-    with the session shuffle-partition count and persists, so every hop's
+    """The walk adjacency is loop-invariant: pinned() hash-partitions it on
+    src with the session shuffle-partition count and persists, so every hop's
     frontier ⋈ adjacency join must read it straight from the cache with NO
     Exchange above the InMemoryTableScan — each hop shuffles only the
     O(active walks) frontier (the defect class pagerank._prepare documents;
     walks had it until r3)."""
-    from pybiodatafuse_spark.plans.walks import _pin, _typed_adjacency
+    from pybiodatafuse_spark.plans.walks import _typed_adjacency
 
     edges = spark.createDataFrame(
         [(i, (i + 3) % 60, 1.0, i % 2) for i in range(60)],
         "src long, dst long, weight double, etype int",
     )
-    adj = _pin(_typed_adjacency(edges))
-    frontier = spark.range(40).select(
-        F.col("id").alias("walk_id"), (F.col("id") % 60).alias("cur")
-    )
-    joined = frontier.hint("shuffle_hash").join(
-        adj, frontier["cur"] == adj["src"], "left"
-    )
-    joined.count()  # execute so AQE finalizes the plan
-    plan = _plan(joined)
-    assert "InMemoryTableScan" in plan, plan
-    lines = plan.splitlines()
-    scan_i = next(i for i, l in enumerate(lines) if "InMemoryTableScan" in l)
-    start_i = next(
-        i for i in range(scan_i, -1, -1) if lines[i].lstrip().startswith("+- ")
-        and len(lines[i]) - len(lines[i].lstrip()) <= 3
-    )
-    edge_branch = "\n".join(lines[start_i:scan_i])
-    assert "Exchange" not in edge_branch, plan
-    adj.unpersist()
+    with pinned(_typed_adjacency(edges), "src") as adj:
+        frontier = spark.range(40).select(
+            F.col("id").alias("walk_id"), (F.col("id") % 60).alias("cur")
+        )
+        joined = frontier.hint("shuffle_hash").join(
+            adj, frontier["cur"] == adj["src"], "left"
+        )
+        joined.count()  # execute so AQE finalizes the plan
+        _no_exchange_above_cache_scan(_plan(joined))
 
 
-def _no_exchange_above_cache_scan(plan: str) -> None:
+def _node_col(line: str) -> int:
+    """Column where a plan tree line's node name starts."""
+    m = re.search(r"[+:]- ", line)
+    return m.end() if m else len(line) - len(line.lstrip())
+
+
+def _no_exchange_above_cache_scan(plan: str, n_scans: int = 1) -> None:
+    """Every InMemoryTableScan (at least ``n_scans`` of them) reaches its
+    consuming join with no Exchange in between: the pinned side's cached
+    partitioning satisfies the join."""
     lines = plan.splitlines()
-    scan_i = next(i for i, l in enumerate(lines) if "InMemoryTableScan" in l)
-    start_i = next(
-        i for i in range(scan_i, -1, -1) if lines[i].lstrip().startswith("+- ")
-        and len(lines[i]) - len(lines[i].lstrip()) <= 3
-    )
-    assert "Exchange" not in "\n".join(lines[start_i:scan_i]), plan
+    scans = [i for i, l in enumerate(lines) if "InMemoryTableScan" in l]
+    assert len(scans) >= n_scans, plan
+    for i in scans:
+        col = _node_col(lines[i])
+        for line in reversed(lines[:i]):  # walk up the scan's ancestors
+            if _node_col(line) < col:
+                col = _node_col(line)
+                node = line[col:]
+                if "Join" in node:
+                    break
+                assert "Exchange" not in node, plan
 
 
 def test_scc_inner_loops_never_reshuffle_edges(spark):
     """Both SCC inner loops (forward coloring joins on src, backward settle
     joins on dst) must read their pinned edge copy straight from cache with
     no Exchange — per-superstep shuffle is O(active labels), not O(E)."""
-    from pybiodatafuse_spark.plans.scc import _pin
-
     edges = spark.createDataFrame(
         [(i, (i + 7) % 80, ) for i in range(80)], "src long, dst long"
     )
-    e_src = _pin(edges, "src")
-    e_dst = _pin(edges, "dst")
-    labels = spark.range(80).select("id", F.col("id").alias("f"))
-    fwd = labels.hint("shuffle_hash").join(e_src, labels["id"] == e_src["src"])
-    fwd.count()
-    _no_exchange_above_cache_scan(_plan(fwd))
-    bwd = labels.hint("shuffle_hash").join(e_dst, labels["id"] == e_dst["dst"])
-    bwd.count()
-    _no_exchange_above_cache_scan(_plan(bwd))
-    e_src.unpersist()
-    e_dst.unpersist()
+    with pinned(edges, "src") as e_src, pinned(edges, "dst") as e_dst:
+        labels = spark.range(80).select("id", F.col("id").alias("f"))
+        fwd = labels.hint("shuffle_hash").join(e_src, labels["id"] == e_src["src"])
+        fwd.count()
+        _no_exchange_above_cache_scan(_plan(fwd))
+        bwd = labels.hint("shuffle_hash").join(e_dst, labels["id"] == e_dst["dst"])
+        bwd.count()
+        _no_exchange_above_cache_scan(_plan(bwd))
 
 
 def test_bfs_frontier_join_never_reshuffles_edges(spark):
-    from pybiodatafuse_spark.plans.bfs import _pin_edges
+    from pybiodatafuse_spark.plans.bfs import _simple
 
     edges = spark.createDataFrame(
         [(i, (i + 3) % 70) for i in range(70)], "src long, dst long"
     )
-    e = _pin_edges(edges, "src")
-    frontier = spark.range(20).select("id")
-    j = frontier.hint("shuffle_hash").join(e, frontier["id"] == e["src"])
-    j.count()
-    _no_exchange_above_cache_scan(_plan(j))
-    e.unpersist()
+    with pinned(_simple(edges), "src") as e:
+        frontier = spark.range(20).select("id")
+        j = frontier.hint("shuffle_hash").join(e, frontier["id"] == e["src"])
+        j.count()
+        _no_exchange_above_cache_scan(_plan(j))
+
+
+def _ring_edges(spark, n: int = 40):
+    rows = [(i, (i + 1) % n, 1.0, 1) for i in range(n)]
+    rows += [(i, (i + 7) % n, 1.0, 1) for i in range(0, n, 2)]
+    return spark.createDataFrame(rows, "src long, dst long, weight double, etype int")
+
+
+# plan module → (call(module, spark, edges) running one superstep, pinned
+# relations its superstep joins against)
+PINNING_ITERATE_USERS = {
+    "hits": (lambda m, s, e: m.hits(s, e, tol=None, max_iter=1), 2),
+    "kcore": (lambda m, s, e: m.k_core(s, e, k=3, max_rounds=1), 1),
+    "labelprop": (lambda m, s, e: m.label_propagation(s, e, max_iter=1), 1),
+}
+
+
+@pytest.mark.parametrize("mod_name", list(PINNING_ITERATE_USERS))
+def test_iterate_users_never_reshuffle_pinned_side(spark, monkeypatch, mod_name):
+    """HITS, k-core and LPA pin their edge relation with pinned(): one
+    superstep built from the plan's own (state0, step_fn) and executed with
+    AQE off reads every pinned copy straight from cache, with no Exchange
+    above any InMemoryTableScan — only the O(V) state side shuffles."""
+    call, n_scans = PINNING_ITERATE_USERS[mod_name]
+    mod = importlib.import_module(f"pybiodatafuse_spark.plans.{mod_name}")
+    orig = mod.iterate
+    plans = []
+
+    def spy(spark_, state0, step_fn, **kw):
+        # still inside the plan's pinned() block: plan superstep 1 as
+        # iterate() does, before anything has materialized the pinned cache
+        with no_aqe(spark_):
+            new_state, _, _ = step_fn(state0.localCheckpoint(eager=False), 1, {})
+            new_state.collect()
+            plans.append(_plan(new_state))
+        return orig(spark_, state0, step_fn, **kw)
+
+    monkeypatch.setattr(mod, "iterate", spy)
+    call(mod, spark, _ring_edges(spark))
+    assert len(plans) == 1
+    _no_exchange_above_cache_scan(plans[0], n_scans)
+
+
+def _spy_pinned(monkeypatch, mod) -> list:
+    """Record every DataFrame that ``mod``'s pinned() yields."""
+    yielded = []
+
+    @contextlib.contextmanager
+    def spy(df, *keys):
+        with pinned(df, *keys) as out:
+            yielded.append(out)
+            yield out
+
+    monkeypatch.setattr(mod, "pinned", spy)
+    return yielded
+
+
+def test_pinned_inputs_released_when_bfs_raises(spark, monkeypatch):
+    """bfs_distances raises when the frontier is still expanding at the hop
+    cap; its pinned O(E) edge copy is unpersisted on that path too."""
+    import pybiodatafuse_spark.plans.bfs as bfs
+
+    yielded = _spy_pinned(monkeypatch, bfs)
+    path = spark.createDataFrame([(i, i + 1) for i in range(4)], "src long, dst long")
+    seeds = spark.createDataFrame([(0,)], "id long")
+    with pytest.raises(RuntimeError, match="still expanding"):
+        bfs.bfs_distances(spark, path, seeds, max_hops=1)
+    assert yielded
+    for df in yielded:
+        assert not df.is_cached and df.storageLevel == StorageLevel.NONE
+
+
+def test_pinned_inputs_released_when_loop_raises(spark, monkeypatch):
+    """An iterate() failure inside label_propagation still unpersists its
+    pinned adjacency."""
+    import pybiodatafuse_spark.plans.labelprop as lp
+
+    yielded = _spy_pinned(monkeypatch, lp)
+
+    def failing_iterate(*a, **kw):
+        raise RuntimeError("superstep failed")
+
+    monkeypatch.setattr(lp, "iterate", failing_iterate)
+    with pytest.raises(RuntimeError, match="superstep failed"):
+        lp.label_propagation(spark, _ring_edges(spark), max_iter=2)
+    assert yielded
+    for df in yielded:
+        assert not df.is_cached and df.storageLevel == StorageLevel.NONE
 
 
 def test_anf_hll_union_is_partial_aggregated(spark):
@@ -240,26 +324,25 @@ def test_anf_hll_union_is_partial_aggregated(spark):
     (partial merge map-side before the shuffle): the executed plan has two
     ObjectHashAggregate nodes for the union, so the shuffle carries one
     sketch per (partition, src), not one per edge."""
-    from pybiodatafuse_spark.plans.bfs import _pin_edges
+    from pybiodatafuse_spark.plans.bfs import _simple
 
     edges = spark.createDataFrame(
         [(i, (i + 3) % 50) for i in range(50)], "src long, dst long"
     )
-    e = _pin_edges(edges, "dst")
-    sk = spark.range(50).select("id").groupBy("id").agg(
-        F.hll_sketch_agg("id", F.lit(12)).alias("sk")
-    )
-    nbr = (
-        sk.hint("shuffle_hash")
-        .join(e, sk["id"] == e["dst"])
-        .groupBy(F.col("src").alias("id"))
-        .agg(F.hll_union_agg("sk").alias("nbr_sk"))
-    )
-    nbr.count()
-    plan = _plan(nbr)
+    with pinned(_simple(edges), "dst") as e:
+        sk = spark.range(50).select("id").groupBy("id").agg(
+            F.hll_sketch_agg("id", F.lit(12)).alias("sk")
+        )
+        nbr = (
+            sk.hint("shuffle_hash")
+            .join(e, sk["id"] == e["dst"])
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.hll_union_agg("sk").alias("nbr_sk"))
+        )
+        nbr.count()
+        plan = _plan(nbr)
     assert plan.count("ObjectHashAggregate") >= 2, plan
     assert "partial_hll_union_agg" in plan or "partial_hllunionagg" in plan.lower(), plan
-    e.unpersist()
 
 
 def _count_jobs(spark, monkeypatch, run) -> dict:

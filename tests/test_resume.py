@@ -25,8 +25,8 @@ from tests.graph_fixture import spark_graph
 def tiny_edges(spark):
     """41 vertices shaped so every iterate user runs several supersteps: a
     random 30-vertex core, a 4-edge tail path hanging off it (k-core peels
-    it one vertex per round, hash-min floods it one hop per round, its end
-    is dangling), a separate 4-cycle, and three sink vertices."""
+    it one vertex per round, its end is dangling), a separate 4-cycle, and
+    three sink vertices."""
     rng = random.Random(11)
     es = {(rng.randrange(30), rng.randrange(30)) for _ in range(90)}
     es = {(u, v) for u, v in es if u != v}
@@ -60,10 +60,7 @@ RESUME_CASES = {
         k_core(s, e, k=2, max_rounds=n, **kw)
     ), 40),
     "components_two_phase": ("components", lambda s, e, n, **kw: _cells(
-        components(s, e, algorithm="two_phase", max_iter=n, **kw)
-    ), 40),
-    "components_hash_min": ("components", lambda s, e, n, **kw: _cells(
-        components(s, e, algorithm="hash_min", max_iter=n, **kw)
+        components(s, e, max_iter=n, **kw)
     ), 40),
     # synchronous LPA oscillates on this graph: stopped by max_iter
     "label_propagation": ("labelprop", lambda s, e, n, **kw: _cells(

@@ -18,18 +18,17 @@ def _hub_graph(spark, n=2000):
 
 def test_hub_edges_spread_across_salt_buckets(spark):
     edges = _hub_graph(spark)
-    edges_norm, init, salted = _prepare(edges, None, 8, 1000, None)
-    assert salted  # the hub trips the adaptive salting on
-    hub_salts = (
-        edges_norm.where(F.col("src") == 0)
-        .groupBy("salt").count().collect()
-    )
+    with _prepare(edges, None, 8, 1000) as (edges_norm, init, salted):
+        assert salted  # the hub trips the adaptive salting on
+        hub_salts = (
+            edges_norm.where(F.col("src") == 0)
+            .groupBy("salt").count().collect()
+        )
+        non_hub = edges_norm.where(F.col("src") != 0).select("salt").distinct().collect()
     assert len(hub_salts) == 8  # hub adjacency split over all 8 buckets
     counts = [r["count"] for r in hub_salts]
     assert max(counts) < 2 * min(counts)  # roughly even spread
-    non_hub = edges_norm.where(F.col("src") != 0).select("salt").distinct().collect()
     assert [r["salt"] for r in non_hub] == [0]  # non-hub rank rows not replicated
-    edges_norm.unpersist()
 
 
 def test_salted_pagerank_correct_on_hub_graph(spark):
