@@ -3,17 +3,21 @@
 
 :func:`components` runs the small-star / large-star alternation of Kiveris
 et al., "Connected Components in MapReduce and Beyond" (SOCC'14) —
-O(log^2 n) supersteps, each superstep a pair of groupBy-min + join rounds
-over the shrinking edge-pair state. Convergence: the edge-pair multiset
-reaches a fixpoint, detected by a deterministic state fingerprint (sum of
-per-pair xxhash64) staying equal on two consecutive supersteps.
+O(log^2 n) supersteps over the shrinking edge-pair state. Each star operator
+reads its input once and takes the neighbourhood minimum with a window over
+``partitionBy(u)``, so a superstep is two window-min passes and one dedup:
+three shuffle exchanges, no broadcast, two scans of the state. At scale a
+hub's window group is buffered in WindowExec's spillable row buffer, not
+held as one in-memory array. Convergence: the edge-pair set reaches a
+fixpoint, detected by an exact state fingerprint (decimal sum of per-pair
+xxhash64) staying equal on two consecutive supersteps.
 
 Component id = min vertex id in the component (matches the union-find oracle).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pybiodatafuse_spark.operators.edges import vertex_ids
@@ -22,39 +26,39 @@ from pybiodatafuse_spark.storage import Storage
 
 
 def _large_star(pairs: DataFrame) -> DataFrame:
+    """Link every larger neighbour of u to u's closed-neighbourhood min.
+    Duplicates are left in: small-star reads the pairs as a set."""
     nbrs = pairs.unionByName(
         pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    mins = nbrs.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+    m = F.least(F.min("v").over(Window.partitionBy("u")), F.col("u"))
     return (
-        nbrs.join(mins, "u")
+        nbrs.select("u", "v", m.alias("m"))
         .where(F.col("v") > F.col("u"))
         .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    )
+
+
+def _small_star(pairs: DataFrame) -> DataFrame:
+    """Link u and every smaller neighbour of u to the min of those
+    neighbours."""
+    ordered = pairs.select(
+        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+    )
+    m = F.min("v").over(Window.partitionBy("u"))
+    return (
+        ordered.select("u", "v", m.alias("m"))
+        .select(F.explode(F.array("v", "u")).alias("u"), F.col("m").alias("v"))
         .where(F.col("u") != F.col("v"))
         .dropDuplicates(["u", "v"])
     )
 
 
-def _small_star(pairs: DataFrame) -> DataFrame:
-    ordered = pairs.select(
-        F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-    )
-    mins = ordered.groupBy("u").agg(F.min("v").alias("m"))  # all v < u here
-    with_self = ordered.unionByName(
-        ordered.select("u", F.col("u").alias("v")).dropDuplicates(["u"])
-    )
-    return (
-        with_self.join(mins, "u")
-        .where(F.col("v") != F.col("m"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-        .dropDuplicates(["u", "v"])
-    )
-
-
 def _fingerprint() -> Column:
-    # Deterministic multiset fingerprint of the pair state; equal on two
-    # consecutive supersteps ⇒ fixpoint (hash-sum collision negligible).
-    return F.sum(F.xxhash64("u", "v").cast("double"))
+    # Exact, order-independent fingerprint of the pair state (a decimal sum
+    # of 64-bit hashes never rounds); equal on two consecutive supersteps ⇒
+    # fixpoint (hash-sum collision negligible).
+    return F.sum(F.xxhash64("u", "v").cast("decimal(38,0)"))
 
 
 def components(
@@ -89,14 +93,9 @@ def components(
         storage=storage,
         run_id=run_id,
     ).state
-    # At fixpoint the pair set is a union of stars (v → component-min m).
-    roots = pairs.select(F.col("v").alias("id")).dropDuplicates(["id"])
-    labels = (
-        pairs.select(F.col("u").alias("id"), F.col("v").alias("component"))
-        .unionByName(roots.select("id", F.col("id").alias("component")))
-        .groupBy("id")
-        .agg(F.min("component").alias("component"))
-    )
+    # At fixpoint the pair set is a union of stars (leaf u → component-min
+    # v, always v < u): a root has no pair as u and keeps its own id.
+    labels = pairs.groupBy(F.col("u").alias("id")).agg(F.min("v").alias("component"))
     return (
         vertex_ids(edges, vertices).join(labels, "id", "left")
         .select("id", F.coalesce("component", "id").alias("component"))

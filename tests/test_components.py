@@ -8,7 +8,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from pybiodatafuse_spark.plans.components import components
+from pybiodatafuse_spark.plans.components import _fingerprint, components
 from tests.graph_fixture import oracle_edges
 from tests.oracles import components_oracle
 
@@ -58,3 +58,34 @@ def test_components_adversarial(spark, algorithm, case):
     }
     want = components_oracle(es, set(vs))
     assert got == want
+
+
+def test_fingerprint_exact_across_orders_and_partitionings(spark):
+    """The fixpoint test compares two consecutive fingerprints for equality,
+    so the same pair set must give the bit-identical fingerprint whatever the
+    row order and partitioning (a floating-point hash sum does not)."""
+    rng = np.random.default_rng(3)
+    rows = [(int(a), int(b)) for a, b in rng.integers(0, 10**6, size=(2000, 2))]
+    fwd = spark.createDataFrame(rows, "u long, v long").repartition(1)
+    rev = spark.createDataFrame(rows[::-1], "u long, v long").repartition(7, "v")
+    prints = [df.agg(_fingerprint()).first()[0] for df in (fwd, rev)]
+    assert prints[0] == prints[1]
+
+
+def test_components_on_union_of_edge_sources(spark):
+    """An edge table unioned from two derived sources (two spark.range
+    projections here) carries per-branch constraints into the pair state;
+    the superstep plan must still analyse and match the oracle."""
+    from pyspark.sql import functions as F
+
+    path = spark.range(100, 123).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+    chords = spark.range(1, 50).select(
+        F.col("id").alias("src"), ((F.col("id") * 7) % 50).alias("dst")
+    )
+    edges = path.unionByName(chords)
+    es = [(i, i + 1) for i in range(100, 123)] + [(i, i * 7 % 50) for i in range(1, 50)]
+    vs = {v for e in es for v in e}
+    got = {r["id"]: r["component"] for r in components(spark, edges).collect()}
+    assert got == components_oracle(es, vs)

@@ -238,6 +238,48 @@ def test_shex_shape_export(spark, tmp_path):
                    attrs={"label": "string"}, max_shapes=2)
 
 
+def test_shex_schema_file_well_formed(spark, tmp_path):
+    """The written ShExC schema is well-formed on a graph with several
+    types, partial attributes and a type with no out-edges: braces balance
+    (never closing below depth 0), each shape is declared once, and every
+    triple constraint ends in a cardinality of `+` or `*`."""
+    import re
+
+    from pybiodatafuse_spark.sinks.rdf import write_shex
+
+    verts = spark.createDataFrame(
+        [
+            (i, f"n{i}" if i % 3 else None, f"s{i}" if i % 2 else None, f"t{i % 4}")
+            for i in range(40)
+        ],
+        "id long, label string, source string, type string",
+    )
+    edges = spark.createDataFrame(
+        [(i, (i * 5 + 1) % 40, 1.0, 1) for i in range(40) if i % 4 != 3],
+        "src long, dst long, weight double, etype int",
+    )
+    path = str(tmp_path / "schema.shex")
+    n = write_shex(verts, edges, path, attrs={"label": "string", "source": "string"})
+    assert n == 4
+    depth, shapes, constraints = 0, [], 0
+    for line in open(path).read().splitlines():
+        m = re.fullmatch(r"<([^<>\s]+)> \{", line)
+        if m:
+            assert depth == 0, line
+            shapes.append(m.group(1))
+        elif depth:
+            if line != "}":
+                assert re.fullmatch(r"  <[^<>\s]+> (<[^<>\s]+>|IRI) [+*]( ;)?", line), line
+                constraints += 1
+        else:
+            assert line == "" or line.startswith("PREFIX "), line
+        depth += line.count("{") - line.count("}")
+        assert depth >= 0, line
+    assert depth == 0
+    assert len(shapes) == len(set(shapes)) == n
+    assert constraints >= 2 * n  # label and source reach every type
+
+
 def test_dea_from_excel_stdlib_fallback(spark, tmp_path):
     """S4: the .xlsx loader works WITHOUT openpyxl via the stdlib zip+XML
     fallback (reference data_loader.py:52-87 semantics: first column renamed

@@ -345,37 +345,65 @@ def test_anf_hll_union_is_partial_aggregated(spark):
     assert "partial_hll_union_agg" in plan or "partial_hllunionagg" in plan.lower(), plan
 
 
-def _count_jobs(spark, monkeypatch, run) -> dict:
-    """Run ``run()`` with each PageRank superstep in its own job group.
-    Returns {superstep: Spark jobs it started}, key 0 for the jobs before the
-    first superstep. A superstep's group spans its step function, its fused
-    action, its checkpoint and its metrics commit."""
-    import uuid
+def _spy_steps(monkeypatch, mod, wrap) -> None:
+    """Patch ``mod.iterate`` so that every superstep runs
+    ``wrap(step_fn)(state, k, carry)`` in place of the plan's own step."""
+    orig = mod.iterate
 
-    import pybiodatafuse_spark.plans.pagerank as pr
+    def spy(spark_, state, step_fn, **kw):
+        return orig(spark_, state, wrap(step_fn), **kw)
+
+    monkeypatch.setattr(mod, "iterate", spy)
+
+
+def _count_jobs(spark, monkeypatch, mod, run) -> dict:
+    """Run ``run()`` with each superstep of plan module ``mod`` in its own
+    job group. Returns {superstep: Spark jobs it started}, key 0 for the jobs
+    before the first superstep. A superstep's group spans its step function,
+    its fused action, its checkpoint and its metrics commit."""
+    import uuid
 
     sc = spark.sparkContext
     tag = uuid.uuid4().hex[:8]
     steps = [0]
-    orig = pr.iterate
 
-    def spy(spark_, state, step_fn, **kw):
+    def wrap(step_fn):
         def step(st, k, carry):
             steps.append(k)
             sc.setJobGroup(f"{tag}-{k}", "superstep")
             return step_fn(st, k, carry)
 
-        return orig(spark_, state, step, **kw)
+        return step
 
     sc.setJobGroup(f"{tag}-0", "prep")
     try:
         with monkeypatch.context() as m:
-            m.setattr(pr, "iterate", spy)
+            _spy_steps(m, mod, wrap)
             run()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     st = sc.statusTracker()
     return {k: len(st.getJobIdsForGroup(f"{tag}-{k}")) for k in steps}
+
+
+def _superstep_plan(monkeypatch, mod, run, k: int = 2) -> str:
+    """Executed plan of the new state that superstep ``k`` of ``mod``'s loop
+    builds (planned inside iterate(), so with AQE off as the loop runs it)."""
+    plans = {}
+
+    def wrap(step_fn):
+        def step(st, j, carry):
+            out = step_fn(st, j, carry)
+            if j == k:
+                plans[j] = _plan(out[0])
+            return out
+
+        return step
+
+    with monkeypatch.context() as m:
+        _spy_steps(m, mod, wrap)
+        run()
+    return plans[k]
 
 
 def _cycle_edges(spark, n: int, sink: bool):
@@ -388,11 +416,11 @@ def _cycle_edges(spark, n: int, sink: bool):
 def test_dangling_free_graph_runs_no_extra_jobs(spark, monkeypatch):
     """The dangling-mass carry is 0, not null, when no vertex is dangling: a
     null carry would re-run the recompute-from-state job every superstep."""
-    from pybiodatafuse_spark.plans.pagerank import pagerank
+    import pybiodatafuse_spark.plans.pagerank as pr
 
     def jobs(sink):
         edges = _cycle_edges(spark, 12, sink)
-        return sum(_count_jobs(spark, monkeypatch, lambda: pagerank(
+        return sum(_count_jobs(spark, monkeypatch, pr, lambda: pr.pagerank(
             spark, edges, tol=None, max_iter=4, hub_threshold=1000
         )).values())
 
@@ -404,15 +432,104 @@ def test_one_job_per_non_checkpoint_superstep(spark, monkeypatch, tmp_path, dura
     """A superstep that writes no snapshot is ONE Spark job, storage on or
     off: with storage on, the per-partition row counts come from the fused
     action and the run_metadata rows wait for the next checkpoint."""
-    from pybiodatafuse_spark.plans.pagerank import pagerank
+    import pybiodatafuse_spark.plans.pagerank as pr
     from pybiodatafuse_spark.storage import Storage
 
     edges = _cycle_edges(spark, 12, sink=True)
     kw = dict(storage=Storage(str(tmp_path / "store")), checkpoint_every=3) if durable else {}
-    jobs = _count_jobs(spark, monkeypatch, lambda: pagerank(
+    jobs = _count_jobs(spark, monkeypatch, pr, lambda: pr.pagerank(
         spark, edges, tol=None, max_iter=4, hub_threshold=1000, **kw
     ))
     # superstep 1 also materializes the loop-invariant inputs (edge table,
     # initial state); with storage on, 3 and 4 write snapshots
     non_checkpoint = [2] if durable else [2, 3, 4]
     assert {k: jobs[k] for k in non_checkpoint} == {k: 1 for k in non_checkpoint}
+
+
+def _node(line: str) -> str:
+    return line[_node_col(line):]
+
+
+def _children(lines: list[str], i: int) -> list[int]:
+    """Line indices of the direct children of plan node ``lines[i]``."""
+    col = _node_col(lines[i])
+    out = []
+    for j in range(i + 1, len(lines)):
+        c = _node_col(lines[j])
+        if c <= col:
+            break
+        if c == col + 3:
+            out.append(j)
+    return out
+
+
+@pytest.mark.parametrize("form", ["join", "csr"])
+def test_pagerank_state_join_adds_no_exchange(spark, monkeypatch, form):
+    """The superstep's state join (state LEFT JOIN contributions on id) adds
+    no Exchange on either side: the checkpointed state keeps its
+    hashpartitioning(id), and the contribution aggregate's
+    hashpartitioning(dst) already satisfies the join: the only exchange
+    between contributions and state is the aggregate's own."""
+    import pybiodatafuse_spark.plans.csr as csr
+    import pybiodatafuse_spark.plans.pagerank as pr
+
+    edges = _cycle_edges(spark, 12, sink=True)
+    if form == "join":
+        mod, run = pr, lambda: pr.pagerank(
+            spark, edges, tol=None, max_iter=2, hub_threshold=1000
+        )
+    else:
+        mod, run = csr, lambda: csr.pagerank_csr(spark, edges, tol=None, max_iter=2)
+    lines = _superstep_plan(monkeypatch, mod, run).splitlines()
+    join = next(i for i, l in enumerate(lines) if "Join" in l and "LeftOuter" in l)
+    inputs = []
+    for i in _children(lines, join):
+        while _node(lines[i]).startswith(("Project", "Filter")):
+            (i,) = _children(lines, i)
+        inputs.append(_node(lines[i]))
+    assert len(inputs) == 2, lines
+    assert inputs[0].startswith("Scan ExistingRDD"), lines
+    assert inputs[1].startswith("HashAggregate"), lines
+
+
+def _cc_edges(spark):
+    """A 24-vertex path plus a 50-vertex cycle with chords (6 supersteps).
+    Built from spark.range, not a Python list, so the optimizer knows the
+    state is small, as it does for a parquet edge table, and a plan that
+    joins the state back to an aggregate of itself would broadcast."""
+    i = F.col("id")
+    return spark.range(1, 123).where((i < 50) | (i >= 100)).select(
+        i.alias("src"),
+        F.when(i < 50, (i * 7) % 50).otherwise(i + 1).alias("dst"),
+        F.lit(1.0).alias("weight"),
+        F.lit(1).alias("etype"),
+    )
+
+
+def test_components_superstep_plan(spark, monkeypatch):
+    """A components superstep is two window-min passes and one dedup: each
+    star operator reads its input once, so the state is scanned twice (both
+    directions of large-star), with exactly three shuffle exchanges and no
+    broadcast."""
+    import pybiodatafuse_spark.plans.components as cc
+
+    plan = _superstep_plan(
+        monkeypatch, cc, lambda: cc.components(spark, _cc_edges(spark))
+    )
+    nodes = [_node(l) for l in plan.splitlines()]
+    assert sum(n.startswith("Exchange ") for n in nodes) == 3, plan
+    assert "BroadcastExchange" not in plan, plan
+    assert plan.count("Scan ExistingRDD") <= 2, plan
+
+
+def test_one_job_per_components_superstep(spark, monkeypatch):
+    """From superstep 2 on (storage off) a components superstep is ONE Spark
+    job: the fused fingerprint action, with no broadcast job beside it."""
+    import pybiodatafuse_spark.plans.components as cc
+
+    jobs = _count_jobs(
+        spark, monkeypatch, cc, lambda: cc.components(spark, _cc_edges(spark))
+    )
+    later = {k: n for k, n in jobs.items() if k >= 2}
+    assert len(later) >= 2, jobs
+    assert later == {k: 1 for k in later}, jobs
